@@ -31,6 +31,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as ST
 from pyspark.sql.window import Window
 
 from ..config import IndexerConfig
@@ -969,14 +970,13 @@ def _finalize_store(
 
     seg_df = segments_df
     if seg_df is None:
-        seg_df = (precomputed_audit or {}).pop("segments_df", None)
-    if seg_df is not None:
         # fresh single-batch build: the whole segment tree IS the batch the
         # caller just read back — reuse that resolved frame (no re-listing,
         # no schema-inference job) for the doc-stat and block reads below
-        doc_stats = seg_df.filter(F.col("part") == "doc")
-    else:
-        doc_stats = store_io.read_doc_stats(spark, store_path)
+        seg_df = (precomputed_audit or {}).pop("segments_df", None)
+    if seg_df is None:
+        seg_df = store_io.read_store(spark, store_path)
+    doc_stats = seg_df.filter(F.col("part") == "doc")
     tomb_path = os.path.join(store_path, "tombstones")
     if fields is None and store_io.read_meta(store_path).get("fields"):
         # a finalize without the flag (CDC apply / compact) must still
@@ -1016,18 +1016,7 @@ def _finalize_store(
         if skip_ts:
             _lm_merge_job()
             return
-        if seg_df is not None:
-            block_cols = [
-                "term", "seg", "block_id", "n_docs", "doc_first", "doc_last",
-                "max_tf", "min_dl", "doc_bytes", "tf_bytes", "dl_bytes",
-                "pos_bytes", "term_bucket", "batch",
-            ]
-            blocks = seg_df.filter(F.col("part") == "block")
-            blocks = blocks.select(
-                *[c for c in block_cols if c in blocks.columns]
-            )
-        else:
-            blocks = store_io.read_blocks(spark, store_path)
+        blocks = store_io.select_blocks(seg_df)
         # sortWithinPartitions("term"): no extra exchange (sorts the agg's
         # own output partitions), but each output file becomes term-ordered,
         # so its parquet row-group min/max stats are tight — the query
@@ -1304,8 +1293,24 @@ def _finalize_store(
         meta["doc_meta_cols"] = list(doc_meta_cols)
     if edge_ngrams:
         meta["edge_ngrams"] = list(edge_ngrams)
+    meta["segments_schema"] = _tree_schema(seg_df.schema).jsonValue()
     with open(os.path.join(store_path, "meta.json"), "w") as f:
         json.dump(meta, f)
+
+
+def _tree_schema(schema: ST.StructType) -> ST.StructType:
+    """The segment tree's read schema, pinned in meta.json so every later
+    read (sources/store_io.read_store) skips schema inference. A fresh
+    single-batch build's frame reads its one ``batch=`` directory, so the
+    tree's ``batch`` partition column is added ahead of ``part`` and
+    ``term_bucket``, in the directory order a tree read infers."""
+    if "batch" in schema.fieldNames():
+        return schema
+    return ST.StructType(
+        [f for f in schema.fields if f.name not in ("part", "term_bucket")]
+        + [ST.StructField("batch", ST.StringType(), True)]
+        + [schema[c] for c in ("part", "term_bucket")]
+    )
 
 
 def explode_nested(

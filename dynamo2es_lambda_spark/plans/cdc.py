@@ -306,11 +306,12 @@ def apply_changes(
                 doc_meta_cols=dmc,
             )
 
+        tomb_dir = os.path.join(
+            store_path, "tombstones", f"batch={batch_name}"
+        )
+
         def _write_tombs():
-            store_io.write_parquet(
-                deletes,
-                os.path.join(store_path, "tombstones", f"batch={batch_name}"),
-            )
+            store_io.write_parquet(deletes, tomb_dir)
 
         thunks = []
         if n_index:
@@ -318,7 +319,15 @@ def apply_changes(
         if n_del:
             thunks.append(_write_tombs)
         if thunks:
-            run_concurrent(*thunks)
+            try:
+                run_concurrent(*thunks)
+            except BaseException:
+                # run_concurrent lets the tombstone write finish before it
+                # re-raises; a batch that failed (no checkpoint) must not
+                # leave its deletes behind for a later finalize to apply
+                # without its upserts
+                shutil.rmtree(tomb_dir, ignore_errors=True)
+                raise
         n_up = _built[0]
 
         # the checkpoint is what advances _next_batch_idx: a delete-only
@@ -336,9 +345,7 @@ def apply_changes(
         # list compaction consumes), not the term_stats/lm/meta rebuild.
         # ONE resolved segment-tree frame serves both the finalize and the
         # compaction read (each spark.read re-listing is its own job).
-        seg_all = store_io.read_store(
-            spark, store_io.segments_path(store_path)
-        )
+        seg_all = store_io.read_store(spark, store_path)
         build._finalize_store(
             spark, store_path, segment_docs or 0, num_buckets,
             derived_stats=compact is not True,
@@ -448,7 +455,8 @@ def compact_store(
         import numpy as np
         import pandas as pd
 
-        # One plain read (single-footer schema inference; reused from the
+        # One plain read (the schema meta.json pins, or single-footer
+        # inference on a store finalized before the pin; reused from the
         # caller when provided) instead of a mergeSchema read, which
         # footer-scans EVERY file as a distributed job. The only column
         # that can legitimately vary across batches is pos_bytes (a store
@@ -459,7 +467,7 @@ def compact_store(
         segs = (
             segs_df
             if segs_df is not None
-            else store_io.read_store(spark, seg_root)
+            else store_io.read_store(spark, store_path)
         )
         meta_pos = bool(
             store_io.read_meta(store_path).get("positions", False)
@@ -508,7 +516,7 @@ def compact_store(
         def rewrite(key, left: "pd.DataFrame", right: "pd.DataFrame"):
             # Vectorized over the whole segment (guide §4.2 — the same
             # grouped-varbyte machinery as the build's block encoder): one
-            # flat decode of every block's doc ids, one isin against the
+            # codec.decode_blocks of every block, one isin against the
             # dead list, and only blocks that actually LOST docs re-encode
             # — as grouped encodes over the kept rows. Unchanged blocks
             # pass through with their original bytes (incl. positional
@@ -520,11 +528,7 @@ def compact_store(
                 return pd.DataFrame(columns=block_cols)
             counts = left["n_docs"].to_numpy(np.int64)
             starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-            gaps = codec.varbyte_decode(
-                b"".join(left["doc_bytes"])
-            ).astype(np.int64)
-            gaps[starts] += left["doc_first"].to_numpy(np.int64)
-            ids = codec.segmented_positions(gaps, counts)
+            ids, tfs, dls = codec.decode_blocks(left)
             keep = ~np.isin(ids, dead_arr)
             kept_counts = np.add.reduceat(keep.astype(np.int64), starts)
             unchanged = kept_counts == counts
@@ -542,12 +546,8 @@ def compact_store(
                     row = left.iloc[i]
                     lo = starts[i]
                     k = keep[lo: lo + counts[i]]
-                    tfs_b = codec.varbyte_decode(
-                        row["tf_bytes"]
-                    ).astype(np.int64) + 1
-                    dls_b = codec.varbyte_decode(
-                        row["dl_bytes"]
-                    ).astype(np.int64) + 1
+                    tfs_b = tfs[lo: lo + counts[i]]
+                    dls_b = dls[lo: lo + counts[i]]
                     pos_payloads = None
                     if row["pos_bytes"] is not None:
                         flat, pstarts = codec.decode_block_positions(
@@ -574,14 +574,6 @@ def compact_store(
                 parts.append(pd.DataFrame(out)[block_cols])
             elif changed.any():
                 sel_rows = np.repeat(changed, counts) & keep
-                # raw stored values (tf-1 / dl-1) re-encode as-is; +1 only
-                # for the max/min block metadata
-                tfs_raw = codec.varbyte_decode(
-                    b"".join(left["tf_bytes"])
-                ).astype(np.int64)
-                dls_raw = codec.varbyte_decode(
-                    b"".join(left["dl_bytes"])
-                ).astype(np.int64)
                 kept_ids = ids[sel_rows]
                 new_counts = kept_counts[changed]
                 nstarts = np.concatenate(([0], np.cumsum(new_counts)[:-1]))
@@ -597,16 +589,15 @@ def compact_store(
                     "n_docs": new_counts,
                     "doc_first": doc_firsts,
                     "doc_last": kept_ids[nends - 1],
-                    "max_tf": np.maximum.reduceat(
-                        tfs_raw[sel_rows], nstarts) + 1,
-                    "min_dl": np.minimum.reduceat(
-                        dls_raw[sel_rows], nstarts) + 1,
+                    "max_tf": np.maximum.reduceat(tfs[sel_rows], nstarts),
+                    "min_dl": np.minimum.reduceat(dls[sel_rows], nstarts),
                     "doc_bytes": codec.varbyte_encode_grouped(
                         gaps2, new_counts),
+                    # stored values are tf-1 / dl-1
                     "tf_bytes": codec.varbyte_encode_grouped(
-                        tfs_raw[sel_rows], new_counts),
+                        tfs[sel_rows] - 1, new_counts),
                     "dl_bytes": codec.varbyte_encode_grouped(
-                        dls_raw[sel_rows], new_counts),
+                        dls[sel_rows] - 1, new_counts),
                     "term_bucket": left["term_bucket"].to_numpy()[ch],
                 })[block_cols])
             if not parts:

@@ -69,29 +69,25 @@ class IndexStore:
         several times (postings + doc stats + constraint routing); each
         fresh ``spark.read`` re-lists the partition directories, and past
         32 leaf dirs that listing is its own distributed Spark job —
-        reusing the resolved plan does the listing once per handle. This
-        memoizes file METADATA only (never rows or results); reload the
-        store after apply_changes/compact_store, as for n_dead."""
+        reusing the resolved plan does the listing once per handle. The
+        read takes the schema pinned in meta.json (``segments_schema``), so
+        resolving it runs no schema-inference job. This memoizes file
+        METADATA only (never rows or results); reload the store after
+        apply_changes/compact_store, as for n_dead."""
         from ..sources import store_io
 
         cache = self.__dict__.setdefault("_seg_cache", {})
         key = spark.sparkContext.applicationId
         df = cache.get(key)
         if df is None:
-            df = store_io.read_store(
-                spark, store_io.segments_path(self.path)
-            )
+            df = store_io.read_store(spark, self.path)
             cache[key] = df
         return df
 
     def postings(self, spark: SparkSession) -> DataFrame:
-        block_cols = [
-            "term", "seg", "block_id", "n_docs", "doc_first", "doc_last",
-            "max_tf", "min_dl", "doc_bytes", "tf_bytes", "dl_bytes",
-            "pos_bytes", "term_bucket", "batch",
-        ]
-        df = self._segments(spark).filter(F.col("part") == "block")
-        return df.select(*[c for c in block_cols if c in df.columns])
+        from ..sources import store_io
+
+        return store_io.select_blocks(self._segments(spark))
 
     def doc_stats(self, spark: SparkSession) -> DataFrame:
         extra = tuple(self.meta.get("doc_meta_cols") or ())
@@ -154,12 +150,14 @@ def load_store(path: str) -> IndexStore:
 
 def _query_terms(queries: pd.DataFrame) -> pd.DataFrame:
     """(qid, query) → (qid, term, qtf); duplicate query terms fold into qtf
-    (Lucene duplicate-term boost semantics)."""
-    rows = []
-    for qid, q in zip(queries["qid"], queries["query"]):
-        toks = analysis.tokenize_series(pd.Series([q]))[0]
-        for t, c in sorted(Counter(toks).items()):
-            rows.append((int(qid), t, int(c)))
+    (Lucene duplicate-term boost semantics). One tokenize pass over the
+    whole query column."""
+    toks = analysis.tokenize_series(pd.Series(list(queries["query"])))
+    rows = [
+        (int(qid), t, int(c))
+        for qid, q_toks in zip(queries["qid"], toks)
+        for t, c in sorted(Counter(q_toks).items())
+    ]
     return pd.DataFrame(rows, columns=["qid", "term", "qtf"])
 
 
@@ -287,22 +285,6 @@ def search(
             agg = agg.join(F.broadcast(need), "qid").filter(
                 F.col("nt") == F.col("need")
             )
-        if search_after is not None:
-            s0, d0 = float(search_after[0]), str(search_after[1])
-            stats = store.doc_stats(spark).select("doc_int", "doc_id")
-            named = agg.join(stats, "doc_int").filter(
-                (F.col("score") < s0)
-                | ((F.col("score") == s0) & (F.col("doc_id") > d0))
-            )
-            w = Window.partitionBy("qid").orderBy(
-                F.col("score").desc(), F.col("doc_id").asc()
-            )
-            return (
-                named.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select("qid", "rank", "doc_id", "score")
-            )
-        topk = _cut_topk(agg, k)
     elif algo == "wand":
         if mode not in ("or", "and"):
             raise ValueError(f"wand algo: unknown mode {mode!r}")
@@ -313,7 +295,9 @@ def search(
                 sorted({int(q) for q in qt["qid"]}),
                 index,
             )
-        topk = _score_wand(
+        # each doc_int lives in exactly one (qid, seg) scorer group, so the
+        # scorer's rows are already per-doc totals — no aggregate needed
+        agg = _score_wand(
             joined, avgdl, k,
             constraints=constraints, has_allow=index is not None,
             mode=mode,
@@ -322,29 +306,27 @@ def search(
             cursor=float(search_after[0]) if search_after is not None
             else None,
         )
-        agg = topk.groupBy("qid", "doc_int").agg(
-            F.max("score").alias("score")
-        )
-        if search_after is not None:
-            s0, d0 = float(search_after[0]), str(search_after[1])
-            stats = store.doc_stats(spark).select("doc_int", "doc_id")
-            named = agg.join(stats, "doc_int").filter(
-                (F.col("score") < s0)
-                | ((F.col("score") == s0) & (F.col("doc_id") > d0))
-            )
-            w = Window.partitionBy("qid").orderBy(
-                F.col("score").desc(), F.col("doc_id").asc()
-            )
-            return (
-                named.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select("qid", "rank", "doc_id", "score")
-            )
-        topk = _cut_topk(agg, k)
     else:
         raise ValueError(f"unknown algo: {algo}")
 
-    return _present(spark, store, topk, k)
+    if search_after is not None:
+        s0, d0 = float(search_after[0]), str(search_after[1])
+        stats = store.doc_stats(spark).select("doc_int", "doc_id")
+        named = agg.join(stats, "doc_int").filter(
+            (F.col("score") < s0)
+            | ((F.col("score") == s0) & (F.col("doc_id") > d0))
+        )
+        w = Window.partitionBy("qid").orderBy(
+            F.col("score").desc(), F.col("doc_id").asc()
+        )
+        return (
+            named.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("qid", "rank", "doc_id", "score")
+        )
+    # the cut keeps the broadcast into _present k-sized per qid (WAND
+    # emits up to k rows per segment)
+    return _present(spark, store, _cut_topk(agg, k), k)
 
 
 EXPLAIN_SCHEMA = (
@@ -403,27 +385,26 @@ def explain_score(
     blocks = (
         _matched_blocks(spark, store, qt)
         .filter((F.col("doc_first") <= di) & (F.col("doc_last") >= di))
-        .select("term", "doc_first", "doc_bytes", "tf_bytes", "dl_bytes")
+        .select("term", "n_docs", "doc_first", "doc_bytes", "tf_bytes",
+                "dl_bytes")
         .toPandas()
     )
+    ids, tfs, dls = codec.decode_blocks(blocks)
+    terms = np.repeat(
+        blocks["term"].to_numpy(object), blocks["n_docs"].to_numpy(np.int64)
+    )
+    hit = ids == di
     out = []
     dfs = dict(zip(qt["term"], qt["df"]))
     qtfs = dict(zip(qt["term"], qt["qtf"]))
-    for r in blocks.itertuples(index=False):
-        ids, tfs, dls = codec.decode_block(
-            r.doc_first, r.doc_bytes, r.tf_bytes, r.dl_bytes
-        )
-        pos = np.searchsorted(ids, di)
-        if pos >= ids.size or ids[pos] != di:
-            continue
-        tf, dl = int(tfs[pos]), int(dls[pos])
-        df_t = float(dfs[r.term])
+    for term, tf, dl in zip(terms[hit], tfs[hit].tolist(), dls[hit].tolist()):
+        df_t = float(dfs[term])
         idf = float(bm25.idf(n_docs, df_t))
         norm = float(bm25.tf_norm(np.array([tf]), np.array([dl]), avgdl)[0])
-        qtf = int(qtfs[r.term])
+        qtf = int(qtfs[term])
         out.append(
             (
-                r.term[len(prefix):] if prefix else r.term,
+                term[len(prefix):] if prefix else term,
                 qtf, int(df_t), idf, tf, dl, norm,
                 qtf * idf * (bm25.K1 + 1.0) * norm,
             )
@@ -523,18 +504,12 @@ def _decode_tfs(joined: DataFrame) -> DataFrame:
             if not len(pdf):
                 continue
             counts = pdf["n_docs"].to_numpy(np.int64)
-            starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-            gaps = codec.varbyte_decode(
-                b"".join(pdf["doc_bytes"])
-            ).astype(np.int64)
-            gaps[starts] += pdf["doc_first"].to_numpy(np.int64)
+            ids, tfs, _ = codec.decode_blocks(pdf)
             yield pd.DataFrame(
                 {"qid": np.repeat(pdf["qid"].to_numpy(np.int64), counts),
                  "term": np.repeat(pdf["term"].to_numpy(object), counts),
-                 "doc_int": codec.segmented_positions(gaps, counts),
-                 "tf": codec.varbyte_decode(
-                     b"".join(pdf["tf_bytes"])
-                 ).astype(np.int64) + 1}
+                 "doc_int": ids,
+                 "tf": tfs}
             )
 
     return joined.select(
@@ -1112,13 +1087,15 @@ def _arrow_isin_read(
     """Driver-side pyarrow point read of ``keys`` from a parquet directory
     whose files are sorted by ``key_col`` (row-group min/max statistics
     prune the scan to the groups that can contain the probed keys — the
-    same point-read shape at any table size). Returns None on any
-    surprise (non-parquet layout, missing dir) so callers fall back to
-    the Spark read. Replaces one whole Spark job (scan + filter +
-    toPandas ≈ a scheduling floor) per lookup."""
-    try:
-        import pyarrow.dataset as pads
+    same point-read shape at any table size). Returns None when the layout
+    is missing or not parquet (``OSError`` / ``ArrowInvalid``) so callers
+    fall back to the Spark read; any other error is a bug and propagates.
+    Replaces one whole Spark job (scan + filter + toPandas ≈ a scheduling
+    floor) per lookup."""
+    import pyarrow as pa
+    import pyarrow.dataset as pads
 
+    try:
         files = []
         for root, _dirs, fns in os.walk(path):
             files.extend(
@@ -1134,7 +1111,7 @@ def _arrow_isin_read(
         return dset.to_table(
             columns=use, filter=pads.field(key_col).isin(keys)
         ).to_pandas()
-    except Exception:  # noqa: BLE001
+    except (OSError, pa.ArrowInvalid):
         return None
 
 
@@ -1209,9 +1186,18 @@ def _matched_blocks(
     qt: pd.DataFrame,
 ) -> DataFrame:
     """Pruned posting-block read for the query-term table ``qt`` (qid, term,
-    w[, bucket...]), broadcast-joined on term. Bucket pruning reads the
+    w[, avgdl][, bucket...]), joined on term. Bucket pruning reads the
     buckets recorded on term_stats when present (zero extra Spark jobs);
-    legacy stores without that column re-hash the terms JVM-side."""
+    legacy stores without that column re-hash the terms JVM-side.
+
+    A query-sized table (≤ 1000 rows) becomes ONE literal map
+    term -> [(qid, w[, avgdl])] exploded against the pruned block read:
+    the map is built in Python as JSON and parsed by ``from_json``,
+    which Catalyst constant-folds into the map literal — one py4j call
+    however many (qid, term) rows there are, no Python->JVM frame
+    conversion and no BroadcastExchange job. Floats ride as Python
+    ``repr`` text, which parses back to the same double. Larger tables
+    broadcast-join a createDataFrame'd frame."""
     live_terms = sorted(qt["term"].unique().tolist())
     if "bucket" in qt.columns and qt["bucket"].notna().all():
         buckets = sorted({int(b) for b in qt["bucket"].unique()})
@@ -1230,36 +1216,26 @@ def _matched_blocks(
         .filter(F.col("term").isin(live_terms))
     )
     has_avgdl = "avgdl" in qt.columns
+    fields = ["qid", "w"] + (["avgdl"] if has_avgdl else [])
     if len(qt) <= 1000:
-        # query-sized term table → a LITERAL map term -> [(qid, w[, avgdl])]
-        # exploded against the pruned block read. Same rows as the former
-        # broadcast join of a createDataFrame'd pandas frame, minus the
-        # driver->JVM frame conversion and the BroadcastExchange job every
-        # single query paid (the build of a broadcast relation is its own
-        # Spark job under AQE).
-        entries = []
-        for term, grp in qt.groupby("term", sort=True):
-            structs = [
-                F.struct(
-                    F.lit(int(r.qid)).cast("long").alias("qid"),
-                    F.lit(float(r.w)).alias("w"),
-                    *(
-                        [F.lit(float(r.avgdl)).alias("avgdl")]
-                        if has_avgdl
-                        else []
-                    ),
-                )
-                for r in grp.itertuples(index=False)
-            ]
-            entries.extend([F.lit(term), F.array(*structs)])
-        qmap = F.create_map(*entries)
-        exploded = blocks.withColumn("_q", F.explode(qmap[F.col("term")]))
-        cols = [F.col("_q.qid").alias("qid"), F.col("_q.w").alias("w")] + (
-            [F.col("_q.avgdl").alias("avgdl")] if has_avgdl else []
+        entries: dict[str, list] = {}
+        for r in qt.sort_values("term", kind="stable").itertuples(
+            index=False
+        ):
+            e = {"qid": int(r.qid), "w": float(r.w)}
+            if has_avgdl:
+                e["avgdl"] = float(r.avgdl)
+            entries.setdefault(r.term, []).append(e)
+        qmap = F.from_json(
+            F.lit(json.dumps(entries)),
+            "map<string,array<struct<qid:bigint,w:double"
+            + (",avgdl:double" if has_avgdl else "") + ">>>",
         )
-        return exploded.select(*blocks.columns, *cols)
-    keep = ["qid", "term", "w"] + (["avgdl"] if has_avgdl else [])
-    qterms_df = spark.createDataFrame(qt[keep])
+        exploded = blocks.withColumn("_q", F.explode(qmap[F.col("term")]))
+        return exploded.select(
+            *blocks.columns, *[F.col(f"_q.{f}").alias(f) for f in fields]
+        )
+    qterms_df = spark.createDataFrame(qt[["term", *fields]])
     return blocks.join(F.broadcast(qterms_df), "term")
 
 
@@ -1925,17 +1901,7 @@ def _decode_positional_terms(pdf: pd.DataFrame) -> dict[str, tuple]:
     )
     counts = pdf["n_docs"].to_numpy(np.int64)
     b_starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    gaps = codec.varbyte_decode(
-        b"".join(pdf["doc_bytes"])
-    ).astype(np.int64)
-    gaps[b_starts] += pdf["doc_first"].to_numpy(np.int64)
-    ids_all = codec.segmented_positions(gaps, counts)
-    tfs_all = codec.varbyte_decode(
-        b"".join(pdf["tf_bytes"])
-    ).astype(np.int64) + 1
-    dls_all = codec.varbyte_decode(
-        b"".join(pdf["dl_bytes"])
-    ).astype(np.int64) + 1
+    ids_all, tfs_all, dls_all = codec.decode_blocks(pdf)
     flat_all = codec.segmented_positions(
         codec.varbyte_decode(b"".join(pdf["pos_bytes"])).astype(np.int64),
         tfs_all,
@@ -7964,28 +7930,16 @@ def _score_exhaustive(joined: DataFrame, avgdl: float) -> DataFrame:
     per_term_avgdl = "avgdl" in joined.columns
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # batch-level decode (guide §4.2): one varbyte decode per payload
-        # column over the whole Arrow batch + one segmented cumsum,
-        # instead of three numpy decodes per block row. Per-posting
-        # arithmetic is the identical elementwise expression (tf_norm's
-        # own formula — scalar vs per-element avgdl of the same value is
-        # the same IEEE division), in the identical row order.
+        # batch-level decode: codec.decode_blocks over the whole Arrow
+        # batch. Per-posting arithmetic is the identical
+        # elementwise expression (tf_norm's own formula — scalar vs
+        # per-element avgdl of the same value is the same IEEE division),
+        # in the identical row order.
         for pdf in batches:
             if not len(pdf):
                 continue
             counts = pdf["n_docs"].to_numpy(np.int64)
-            starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-            gaps = codec.varbyte_decode(
-                b"".join(pdf["doc_bytes"])
-            ).astype(np.int64)
-            gaps[starts] += pdf["doc_first"].to_numpy(np.int64)
-            ids = codec.segmented_positions(gaps, counts)
-            tfs = codec.varbyte_decode(
-                b"".join(pdf["tf_bytes"])
-            ).astype(np.int64) + 1
-            dls = codec.varbyte_decode(
-                b"".join(pdf["dl_bytes"])
-            ).astype(np.int64) + 1
+            ids, tfs, dls = codec.decode_blocks(pdf)
             w = np.repeat(pdf["w"].to_numpy(np.float64), counts)
             if per_term_avgdl:
                 ad = np.repeat(pdf["avgdl"].to_numpy(np.float64), counts)
@@ -8010,8 +7964,8 @@ def _score_exhaustive(joined: DataFrame, avgdl: float) -> DataFrame:
     )
 
 
-_WAND_COLS = ["qid", "seg", "term", "w", "doc_first", "doc_last", "max_tf",
-              "min_dl", "doc_bytes", "tf_bytes", "dl_bytes"]
+_WAND_COLS = ["qid", "seg", "term", "w", "n_docs", "doc_first", "doc_last",
+              "max_tf", "min_dl", "doc_bytes", "tf_bytes", "dl_bytes"]
 _WAND_SCHEMA = "qid long, doc_int long, score double"
 
 
@@ -8030,7 +7984,15 @@ def _score_wand(
 
     Document-at-a-time over the segment's term posting lists with a k-sized
     min-heap; a block is decoded only when the sum of the *remaining* terms'
-    block upper bounds can beat the heap threshold.
+    block upper bounds can beat the heap threshold. Each round decodes all
+    of its selected blocks in ONE ``codec.decode_blocks`` call.
+
+    Output: (qid, doc_int, score) with each doc's FINAL score — doc_ints
+    are unique store-wide (audited by plans/build._finalize_store) and all
+    of a doc's postings sit in one segment, so a doc_int lives in exactly
+    one (qid, seg) group and callers need no per-doc aggregate. A group
+    emits its top k plus score ties at the k boundary; callers still cut
+    per qid (``_cut_topk``) because the row count grows with the segments.
 
     ``constraints`` (qid, seg, doc_int, kind) rows — from
     ``_segment_constraints`` — are cogrouped with the block groups so dead
@@ -8078,13 +8040,20 @@ def _score_wand(
         allow: np.ndarray | None,
         dead: np.ndarray | None,
     ) -> pd.DataFrame:
-        # Per term: block table + per-block upper bounds; term-level ub.
+        # Per term: block columns as numpy arrays in doc order + per-block
+        # upper bounds; term-level ub. A term's blocks in one segment hold
+        # disjoint doc ranges, so the doc_first order is unique.
+        pdf = pdf.sort_values(["term", "doc_first"], ignore_index=True)
+        cols = {
+            c: pdf[c].to_numpy()
+            for c in _WAND_COLS if c not in ("qid", "seg", "term")
+        }
+        terms = pdf["term"].to_numpy(object)
+        cuts = np.flatnonzero(terms[1:] != terms[:-1]) + 1
         per_term = []
-        for _, tdf in pdf.groupby("term", sort=True):
-            tdf = tdf.sort_values("doc_first").reset_index(drop=True)
-            ub = tdf["w"].to_numpy() * bm25.tf_norm(
-                tdf["max_tf"].to_numpy(), tdf["min_dl"].to_numpy(), avgdl
-            )
+        for lo, hi in zip([0, *cuts], [*cuts, len(terms)]):
+            tdf = {c: a[lo:hi] for c, a in cols.items()}
+            ub = tdf["w"] * bm25.tf_norm(tdf["max_tf"], tdf["min_dl"], avgdl)
             per_term.append((float(ub.max()), tdf, ub))
         # MaxScore ordering: biggest-potential terms first (essential set).
         per_term.sort(key=lambda t: -t[0])
@@ -8097,29 +8066,20 @@ def _score_wand(
         cand_nt = np.zeros(0, dtype=np.int64)       # distinct matched terms
         tau = float("-inf")                         # kth-best partial so far
 
-        def decode_rows(tdf: pd.DataFrame, sel: np.ndarray):
-            ids_l, sc_l = [], []
-            for ri in np.nonzero(sel)[0]:
-                row = tdf.iloc[ri]
-                ids, tfs, dls = codec.decode_block(
-                    row["doc_first"], row["doc_bytes"],
-                    row["tf_bytes"], row["dl_bytes"],
-                )
-                mask = None
-                if allow is not None:
-                    mask = np.isin(ids, allow)
-                if dead is not None:
-                    m2 = ~np.isin(ids, dead)
-                    mask = m2 if mask is None else (mask & m2)
-                if mask is not None:
-                    ids, tfs, dls = ids[mask], tfs[mask], dls[mask]
-                    if not ids.size:
-                        continue
-                ids_l.append(ids)
-                sc_l.append(row["w"] * bm25.tf_norm(tfs, dls, avgdl))
-            if not ids_l:
-                return np.zeros(0, np.int64), np.zeros(0, np.float64)
-            return np.concatenate(ids_l), np.concatenate(sc_l)
+        def decode_rows(tdf: dict, sel: np.ndarray):
+            # one codec.decode_blocks call for every selected block
+            blk = {c: a[sel] for c, a in tdf.items()}
+            ids, tfs, dls = codec.decode_blocks(blk)
+            w = np.repeat(blk["w"], blk["n_docs"])
+            mask = None
+            if allow is not None:
+                mask = np.isin(ids, allow)
+            if dead is not None:
+                m2 = ~np.isin(ids, dead)
+                mask = m2 if mask is None else (mask & m2)
+            if mask is not None:
+                ids, tfs, dls, w = ids[mask], tfs[mask], dls[mask], w[mask]
+            return ids, w * bm25.tf_norm(tfs, dls, avgdl)
 
         def final_cut(ids: np.ndarray, scores: np.ndarray) -> pd.DataFrame:
             """Top-k with ties; under a cursor, top-k among strictly-below
@@ -8158,9 +8118,9 @@ def _score_wand(
                 return empty
             # seed from the sparsest term (fewest blocks) — candidates
             # only shrink from there
-            by_rarity = sorted(per_term, key=lambda t: len(t[1]))
+            by_rarity = sorted(per_term, key=lambda t: len(t[2]))
             ids0, sc0 = decode_rows(
-                by_rarity[0][1], np.ones(len(by_rarity[0][1]), dtype=bool)
+                by_rarity[0][1], np.ones(len(by_rarity[0][2]), dtype=bool)
             )
             order0 = np.argsort(ids0, kind="stable")
             cand_ids, cand_scores = ids0[order0], sc0[order0]
@@ -8168,10 +8128,10 @@ def _score_wand(
                 if not cand_ids.size:
                     return empty
                 lo = np.searchsorted(
-                    cand_ids, tdf["doc_first"].to_numpy(), side="left"
+                    cand_ids, tdf["doc_first"], side="left"
                 )
                 hi = np.searchsorted(
-                    cand_ids, tdf["doc_last"].to_numpy(), side="right"
+                    cand_ids, tdf["doc_last"], side="right"
                 )
                 ids, sc = decode_rows(tdf, hi > lo)
                 order = np.argsort(ids, kind="stable")
@@ -8216,14 +8176,14 @@ def _score_wand(
                 # decode all blocks; block-level skip only for blocks that
                 # cannot beat tau AND contain no current candidate (their
                 # docs can neither enter nor affect the final top-k).
-                sel = np.ones(len(tdf), dtype=bool)
+                sel = np.ones(len(block_ub), dtype=bool)
                 if np.isfinite(tau) and len(cand_ids):
                     cannot_enter = block_ub + suffix[i + 1] < tau
                     lo = np.searchsorted(
-                        cand_ids, tdf["doc_first"].to_numpy(), side="left"
+                        cand_ids, tdf["doc_first"], side="left"
                     )
                     hi = np.searchsorted(
-                        cand_ids, tdf["doc_last"].to_numpy(), side="right"
+                        cand_ids, tdf["doc_last"], side="right"
                     )
                     has_cand = hi > lo
                     sel = ~(cannot_enter & ~has_cand)
@@ -8248,10 +8208,10 @@ def _score_wand(
                 # can still change — decode only blocks overlapping the
                 # candidate set, add their contributions (exact scores).
                 lo = np.searchsorted(
-                    cand_ids, tdf["doc_first"].to_numpy(), side="left"
+                    cand_ids, tdf["doc_first"], side="left"
                 )
                 hi = np.searchsorted(
-                    cand_ids, tdf["doc_last"].to_numpy(), side="right"
+                    cand_ids, tdf["doc_last"], side="right"
                 )
                 sel = hi > lo
                 ids, sc = decode_rows(tdf, sel)
@@ -10346,17 +10306,10 @@ def search_sparse_vector(
             if not len(pdf):
                 continue
             counts = pdf["n_docs"].to_numpy(np.int64)
-            starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-            gaps = codec.varbyte_decode(
-                b"".join(pdf["doc_bytes"])
-            ).astype(np.int64)
-            gaps[starts] += pdf["doc_first"].to_numpy(np.int64)
-            tfs = codec.varbyte_decode(
-                b"".join(pdf["tf_bytes"])
-            ).astype(np.int64) + 1
+            ids, tfs, _ = codec.decode_blocks(pdf)
             yield pd.DataFrame(
                 {"qid": np.repeat(pdf["qid"].to_numpy(np.int64), counts),
-                 "doc_int": codec.segmented_positions(gaps, counts),
+                 "doc_int": ids,
                  "score": np.repeat(pdf["w"].to_numpy(np.float64), counts)
                  * np.log1p(tfs)}
             )
@@ -10633,27 +10586,18 @@ def search_frequent_item_sets(
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # batch-level decode (guide §4.2): ONE varbyte decode over the
-        # whole Arrow batch's concatenated doc_bytes + one segmented
-        # cumsum, instead of three numpy decodes per block row (tf/dl
-        # payloads were decoded and thrown away; they no longer even
-        # cross the Python boundary). Identical ids per block.
-        import numpy as np
-
+        # batch-level decode: codec.decode_blocks over the whole Arrow
+        # batch's doc_bytes only (tf/dl payloads never cross
+        # the Python boundary). Identical ids per block.
         for pdf in batches:
             if not len(pdf):
                 continue
-            counts = pdf["n_docs"].to_numpy(np.int64)
-            gaps = codec.varbyte_decode(
-                b"".join(pdf["doc_bytes"])
-            ).astype(np.int64)
-            starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-            # each block's first gap is stored as 0 (first doc rides
-            # doc_first absolutely) — make it absolute per block
-            gaps[starts] += pdf["doc_first"].to_numpy(np.int64)
             yield pd.DataFrame(
-                {"term": np.repeat(pdf["term"].to_numpy(object), counts),
-                 "doc_int": codec.segmented_positions(gaps, counts)}
+                {"term": np.repeat(
+                    pdf["term"].to_numpy(object),
+                    pdf["n_docs"].to_numpy(np.int64),
+                ),
+                 "doc_int": codec.decode_blocks(pdf)[0]}
             )
 
     items = blocks.select(

@@ -104,17 +104,27 @@ def segments_path(store_path: str) -> str:
     return os.path.join(store_path, "segments")
 
 
-def read_store(spark, path: str):
-    """Format-routed read of a store table (see :func:`storage_format`)."""
-    return spark.read.format(storage_format(spark)).load(path)
+def read_store(spark, store_path: str):
+    """Format-routed read of a store's segment tree (see
+    :func:`storage_format`), with the schema meta.json pins as
+    ``segments_schema`` (plans/build._finalize_store), so the read spends
+    no schema-inference job. Stores finalized before that key existed keep
+    the inferred read — the only path their layout has."""
+    reader = spark.read.format(storage_format(spark))
+    pinned = read_meta(store_path).get("segments_schema")
+    if pinned is not None:
+        from pyspark.sql.types import StructType
+
+        reader = reader.schema(StructType.fromJson(pinned))
+    return reader.load(segments_path(store_path))
 
 
-def read_blocks(spark, store_path: str):
-    """Posting-block rows ONLY, projected to the block columns — marker
-    metadata (including user doc_meta_cols, whose names are free-form)
-    must never ride into query-side joins where they could shadow the
-    planner's own columns; the projection is also the column pruning the
-    posting reads want."""
+def select_blocks(segs):
+    """Posting-block rows ONLY of a segment-tree frame, projected to the
+    block columns — marker metadata (including user doc_meta_cols, whose
+    names are free-form) must never ride into query-side joins where they
+    could shadow the planner's own columns; the projection is also the
+    column pruning the posting reads want."""
     from pyspark.sql import functions as F
 
     block_cols = [
@@ -122,16 +132,18 @@ def read_blocks(spark, store_path: str):
         "max_tf", "min_dl", "doc_bytes", "tf_bytes", "dl_bytes",
         "pos_bytes", "term_bucket", "batch",
     ]
-    df = read_store(spark, segments_path(store_path)).filter(
-        F.col("part") == "block"
-    )
+    df = segs.filter(F.col("part") == "block")
     return df.select(*[c for c in block_cols if c in df.columns])
+
+
+def read_blocks(spark, store_path: str):
+    return select_blocks(read_store(spark, store_path))
 
 
 def read_doc_stats(spark, store_path: str):
     from pyspark.sql import functions as F
 
-    df = read_store(spark, segments_path(store_path)).filter(
+    df = read_store(spark, store_path).filter(
         F.col("part") == "doc"
     )
     extra = tuple(read_meta(store_path).get("doc_meta_cols") or ())
@@ -166,7 +178,7 @@ def read_doc_rows(spark, store_path: str, cols: tuple[str, ...] = ("doc_int", "s
 
     from ..errors import EngineError
 
-    df = read_store(spark, segments_path(store_path)).filter(
+    df = read_store(spark, store_path).filter(
         F.col("part") == "doc"
     )
     if "doc_seg" not in df.columns:

@@ -317,3 +317,64 @@ def test_lww_version_tie_is_deterministic(spark):
         assert len(w) == 1
         winners.add(w["content"].iloc[0])
     assert len(winners) == 1
+
+
+def test_failed_batch_build_leaves_no_tombstones(spark, tmp_path, monkeypatch):
+    """Fault injection: the batch build raises inside run_concurrent while
+    the tombstone write runs beside it. The batch never checkpoints, so its
+    tombstones must be gone too — a later finalize would otherwise apply
+    its deletes without its upserts."""
+    path = str(tmp_path / "cdc_fail")
+    build.build_index(
+        spark.createDataFrame(_corpus0()), CFG, path,
+        segment_docs=64, num_buckets=8,
+    )
+    name = f"b{cdc._next_batch_idx(path)}"
+
+    def failing_build(*args, **kwargs):
+        raise RuntimeError("injected batch build failure")
+
+    monkeypatch.setattr(build, "_build_batch", failing_build)
+    with pytest.raises(RuntimeError, match="injected batch build failure"):
+        cdc.apply_changes(_events_df(spark), CFG, path, segment_docs=64)
+    assert not os.path.exists(
+        os.path.join(path, "tombstones", f"batch={name}")
+    )
+    assert not os.path.exists(
+        os.path.join(path, "checkpoints", f"{name}.json")
+    )
+
+
+def test_pinned_segment_schema(spark, tmp_path):
+    """meta.json pins the segment tree's schema as a tree read would infer
+    it; a store finalized before the pin reads by inference with the same
+    answers, and its next finalize pins the schema."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    from dynamo2es_lambda_spark.sources import store_io
+
+    path = str(tmp_path / "pinned")
+    build.build_index(
+        spark.createDataFrame(_corpus0()), CFG, path,
+        segment_docs=64, num_buckets=8,
+    )
+    meta = store_io.read_meta(path)
+    pinned = StructType.fromJson(meta["segments_schema"])
+    inferred = spark.read.parquet(os.path.join(path, "segments")).schema
+    assert pinned.fieldNames() == inferred.fieldNames()
+    q = pd.DataFrame({"qid": [0, 1], "query": ["def", "return function"]})
+
+    def answers():
+        return search.search(
+            spark, search.load_store(path), q, k=10, algo="wand"
+        ).collect()
+
+    want = answers()
+    del meta["segments_schema"]
+    with open(os.path.join(path, "meta.json"), "w") as f:
+        json.dump(meta, f)
+    assert answers() == want
+    cdc.apply_changes(_events_df(spark), CFG, path, segment_docs=64)
+    assert "segments_schema" in store_io.read_meta(path)

@@ -111,3 +111,58 @@ def test_segmented_positions_roundtrip(gap_groups):
     for i, g in enumerate(pos_groups):
         assert starts[i] == off
         off += len(g)
+
+
+@given(
+    st.lists(
+        st.tuples(
+            st.integers(min_value=-(2**62), max_value=2**62),  # doc_first
+            st.lists(
+                st.tuples(
+                    st.integers(min_value=1, max_value=10**9),  # doc gap
+                    st.integers(min_value=1, max_value=1000),   # tf
+                    st.integers(min_value=1, max_value=5000),   # dl
+                ),
+                max_size=codec.BLOCK_SIZE - 1,
+            ),
+        ),
+        max_size=12,
+    ),
+    st.data(),
+)
+@settings(max_examples=80, deadline=None)
+def test_decode_blocks_matches_per_block(blocks, data):
+    """codec.decode_blocks over any selection of blocks (empty selections
+    and 1-doc blocks included) == per-block decode_block, concatenated."""
+    enc = []
+    for first, rows in blocks:
+        ids = first + np.cumsum([0] + [r[0] for r in rows], dtype=np.int64)
+        tfs = np.array([1] + [r[1] for r in rows], dtype=np.int64)
+        dls = np.array([1] + [r[2] for r in rows], dtype=np.int64)
+        (b,) = codec.encode_blocks(ids, tfs, dls)
+        enc.append(b)
+    sel = [b for b in enc if data.draw(st.booleans())]
+    cols = {
+        c: np.array([b[c] for b in sel], dtype=object)
+        for c in ("n_docs", "doc_first", "doc_bytes", "tf_bytes", "dl_bytes")
+    }
+    got = codec.decode_blocks(cols)
+    want = [
+        codec.decode_block(
+            b["doc_first"], b["doc_bytes"], b["tf_bytes"], b["dl_bytes"]
+        )
+        for b in sel
+    ]
+    for i in range(3):
+        exp = (
+            np.concatenate([w[i] for w in want])
+            if want
+            else np.zeros(0, np.int64)
+        )
+        assert got[i].dtype == np.int64
+        assert got[i].tolist() == exp.tolist()
+    # payload columns the frame does not carry decode to None
+    del cols["dl_bytes"]
+    ids, tfs, dls = codec.decode_blocks(cols)
+    assert dls is None
+    assert ids.tolist() == got[0].tolist() and tfs.tolist() == got[1].tolist()

@@ -134,3 +134,157 @@ def test_wand_msm_with_deletes_constraints(spark, store, qsets, tmp_path):
         search.search(spark, st2, multi, algo="wand", **kw),
         search.search(spark, st2, multi, algo="exhaustive", **kw),
     )
+
+
+# ------------------------------------------- batched planner and scorer
+
+MF_FIELDS = ("content", "path")
+
+
+@pytest.fixture(scope="module")
+def mf_store(spark, corpus_df, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("wand_mf"))
+    build.build_index(
+        corpus_df, CFG, path, segment_docs=32, num_buckets=8,
+        fields=MF_FIELDS,
+    )
+    return search.load_store(path)
+
+
+def _batch40():
+    """40 queries: one to three analyzed terms each, hot and tail, with a
+    camelCase entry, an absent term and a repeated term (qtf 2)."""
+    from dynamo2es_lambda_spark.sources import synthetic
+
+    vocab = synthetic.vocabulary()
+    qs = []
+    for i in range(40):
+        a, b = vocab[(7 * i) % 500], vocab[(31 * i + 3) % 500]
+        qs.append(
+            [a, f"{a} {b}", f"{a} {b} {vocab[i]}", f"{a} {a}",
+             f"{b} zzznotaterm"][i % 5]
+        )
+    return pd.DataFrame({"qid": np.arange(40, dtype=np.int64), "query": qs})
+
+
+def _exact(res):
+    pdf = _pages(res)
+    return list(zip(pdf["qid"], pdf["rank"], pdf["doc_id"], pdf["score"]))
+
+
+@pytest.mark.parametrize("field", MF_FIELDS)
+def test_wand_batch40_multifield_bit_identical(spark, mf_store, field):
+    q = _batch40()
+    if field == "path":
+        q["query"] = [
+            ["src lib", "mod", "py go", "self this", "js"][i % 5]
+            for i in range(len(q))
+        ]
+    wand = _exact(search.search(spark, mf_store, q, k=10, algo="wand",
+                                field=field))
+    exh = _exact(search.search(spark, mf_store, q, k=10,
+                               algo="exhaustive", field=field))
+    assert wand and [r[:3] for r in wand] == [r[:3] for r in exh]
+    # a sum of two floats does not depend on its order, so queries of at
+    # most two analyzed terms score bit for bit alike; longer sums run in
+    # the scorer's term order on one side and Spark's aggregate order on
+    # the other, and may differ in the last bits
+    n_terms = search._query_terms(q).groupby("qid").size()
+    for (qid, _, _, sw), (_, _, _, se) in zip(wand, exh):
+        if n_terms[qid] <= 2:
+            assert sw == se, (qid, sw, se)
+        else:
+            assert abs(sw - se) <= 4 * np.spacing(se), (qid, sw, se)
+
+
+def test_literal_term_map_escapes_round_trip(spark, mf_store, monkeypatch):
+    """Map keys with a quote, a backslash and non-ASCII characters (BMP
+    and astral) survive the JSON literal term map: with every posting
+    term renamed that way, the matched rows and the WAND and exhaustive
+    scores equal those of the plain qualified terms, bit for bit."""
+    from pyspark.sql import functions as F
+
+    suffix = ' "q\\ué中\U0001F600'
+    n_docs = float(mf_store.meta["n_docs"])
+    prefix, avgdl = search._field_of(mf_store, None)
+    qt = search._query_terms(_batch40())
+    qt["term"] = prefix + qt["term"]
+    qt = search._join_term_stats(
+        spark, mf_store, qt, sorted(qt["term"].unique().tolist())
+    ).dropna(subset=["df"])
+    qt["w"] = (
+        search.bm25.idf(n_docs, qt["df"].to_numpy())
+        * (search.bm25.K1 + 1.0) * qt["qtf"].to_numpy()
+    )
+    renamed = search.load_store(mf_store.path)
+    plain_postings = renamed.postings
+    monkeypatch.setattr(
+        renamed, "postings",
+        lambda s: plain_postings(s).withColumn(
+            "term", F.concat("term", F.lit(suffix))
+        ),
+    )
+    qt_renamed = qt.assign(term=qt["term"] + suffix)
+
+    def run(st, table):
+        joined = search._matched_blocks(spark, st, table)
+        rows = sorted(
+            (r.qid, r.term.removesuffix(suffix), r.seg, r.block_id, r.w)
+            for r in joined.select("qid", "term", "seg", "block_id", "w")
+            .collect()
+        )
+        wand = search._score_wand(joined, avgdl, 10)
+        exh = search._score_exhaustive(joined, avgdl).groupBy(
+            "qid", "doc_int"
+        ).agg(F.sum("score").alias("score"))
+        return rows, [
+            sorted(map(tuple, search._cut_topk(x, 10).collect()))
+            for x in (wand, exh)
+        ]
+
+    rows, (wand, exh) = run(mf_store, qt)
+    rows_r, (wand_r, exh_r) = run(renamed, qt_renamed)
+    assert rows and rows_r == rows
+    assert wand and wand_r == wand and exh_r == exh
+
+
+def test_arrow_point_read_falls_back_only_on_layout_errors(
+    tmp_path, monkeypatch
+):
+    """A missing or non-parquet layout → None (the caller's Spark read);
+    any other error inside the fast path propagates."""
+    import pyarrow.dataset as pads
+
+    assert search._arrow_isin_read(str(tmp_path / "nope"), "term", ["a"]) \
+        is None
+    bad = tmp_path / "bad"
+    bad.mkdir()
+    (bad / "part-0.parquet").write_bytes(b"not a parquet file")
+    assert search._arrow_isin_read(str(bad), "term", ["a"]) is None
+
+    def broken(*args, **kwargs):
+        raise TypeError("injected fast-path bug")
+
+    monkeypatch.setattr(pads, "dataset", broken)
+    with pytest.raises(TypeError, match="injected fast-path bug"):
+        search._arrow_isin_read(str(bad), "term", ["a"])
+
+
+def test_wand_single_term_job_count(spark, store):
+    """A single-term WAND search + collect on a fresh handle of a store
+    without dead docs runs at most 5 Spark jobs: the pinned segment schema
+    skips schema inference, the literal term map needs no broadcast
+    build, and no aggregate runs after the scorer."""
+    assert store.n_dead() == 0
+    fresh = search.load_store(store.path)
+    q = pd.DataFrame({"qid": [0], "query": ["def"]})
+    sc = spark.sparkContext
+    group = "wand_single_term_jobs"
+    sc.setJobGroup(group, "WAND job count guard")
+    try:
+        rows = search.search(spark, fresh, q, k=10, algo="wand").collect()
+    finally:
+        sc.setJobGroup(None, None)
+    assert rows
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= 5, n_jobs
