@@ -52,19 +52,3 @@ def block_upper_bound(max_tf, min_dl, df, n_docs: float, avgdl: float,
                       k1: float = K1, b: float = B) -> np.ndarray:
     """Safe upper bound on any score inside a block (block-max WAND)."""
     return score(max_tf, min_dl, df, n_docs, avgdl, k1, b)
-
-
-def spark_score_sql(tf: str, dl: str, df: str, n: str, avgdl: str) -> str:
-    """Spark SQL expression for the identical formula (float64 built-ins)."""
-    return (
-        f"ln(1.0 + ({n} - {df} + 0.5) / ({df} + 0.5)) * ({K1} + 1.0) * {tf} / "
-        f"({tf} + {K1} * (1.0 - {B} + {B} * {dl} / {avgdl}))"
-    )
-
-
-def duckdb_score_sql(tf: str, dl: str, df: str, n: str, avgdl: str) -> str:
-    """DuckDB SQL expression for the identical formula."""
-    return (
-        f"ln(1.0 + ({n} - {df} + 0.5) / ({df} + 0.5)) * ({K1} + 1.0) * {tf} / "
-        f"({tf} + {K1} * (1.0 - {B} + {B} * {dl} / {avgdl}))"
-    )

@@ -223,11 +223,6 @@ def simhash(df: DataFrame, id_col: str, text_col: str,
     )
 
 
-def hamming_distance(a: Column, b: Column) -> Column:
-    return F.expr(f"bit_count({a} ^ {b})") if isinstance(a, str) else \
-        F.bit_count(a.bitwiseXOR(b))
-
-
 def chunk_dup_stats(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -1,205 +1,17 @@
-"""Multimodal columns: image/audio/video as opaque binary + typed metadata.
+"""Multimodal columns: opaque binary payloads → typed metadata.
 
-The Spark-side plumbing is real — schemas, Arrow binary-column transfer,
-mapInPandas batch shapes, explode patterns. The codec step uses the REAL
-libraries when they are importable (PIL for images, soundfile for audio —
-optional imports below) and otherwise a DETERMINISTIC FAKE that derives
-statistics from the raw payload bytes via numpy; payloads the real codec
-cannot parse also fall back to the fake, so synthetic byte-buffer tests
-stay deterministic alongside real media.
-
-Table convention:
-  media(media_id long, kind string in {image,audio,video},
-        payload binary, width int, height int, sample_rate int,
-        n_frames int, fmt string)
+The Spark-side plumbing of a binary column: Arrow binary-column transfer
+and the mapInPandas batch shape every media stage shares. Backs the
+``multimodal_meta`` oracle entry (plans/entry_queries.q_multimodal_meta).
 """
 
 from __future__ import annotations
 
-import io
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-try:  # optional real image codec
-    from PIL import Image as _PIL_Image
-
-    _HAS_PIL = True
-except ImportError:  # pragma: no cover - environment-dependent
-    _PIL_Image = None
-    _HAS_PIL = False
-
-try:  # optional real audio codec
-    import soundfile as _soundfile
-
-    _HAS_SOUNDFILE = True
-except ImportError:  # pragma: no cover - environment-dependent
-    _soundfile = None
-    _HAS_SOUNDFILE = False
-
-MEDIA_SCHEMA = (
-    "media_id long, kind string, payload binary, width int, height int, "
-    "sample_rate int, n_frames int, fmt string"
-)
-
-# derived from the imports, not hand-flipped: True means at least one
-# real decoder is active (per-payload fallback to the fake still applies)
-_REAL_CODECS = _HAS_PIL or _HAS_SOUNDFILE
-
-
-def _fake_pixels(payload: bytes, width: int, height: int) -> np.ndarray:
-    raw = np.frombuffer(payload, dtype=np.uint8)
-    need = max(width * height, 1)
-    reps = -(-need // max(raw.size, 1))
-    return np.tile(raw, reps)[:need].reshape(max(height, 1), -1)
-
-
-def _decode_pixels(payload: bytes, width: int, height: int) -> np.ndarray:
-    """Decode an image payload to a grayscale uint8 matrix: PIL when
-    importable AND the payload parses as an encoded image; else the
-    deterministic byte-buffer fake (repeat payload bytes to width ×
-    height)."""
-    if _HAS_PIL:
-        try:
-            img = _PIL_Image.open(io.BytesIO(payload)).convert("L")
-            return np.asarray(img, dtype=np.uint8)
-        except Exception:  # noqa: BLE001 - unparseable → deterministic fake
-            pass
-    return _fake_pixels(payload, width, height)
-
-
-def _fake_samples(payload: bytes) -> np.ndarray:
-    raw = np.frombuffer(payload, dtype=np.uint8).astype(np.float64)
-    return (raw - 127.5) / 127.5
-
-
-def _decode_samples(payload: bytes) -> np.ndarray:
-    """Decode an audio payload to centered float samples in [-1, 1]:
-    soundfile when importable AND the payload parses; else the
-    deterministic byte-centering fake."""
-    if _HAS_SOUNDFILE:
-        try:
-            data, _sr = _soundfile.read(io.BytesIO(payload), dtype="float64")
-            return np.asarray(data, dtype=np.float64).reshape(-1)
-        except Exception:  # noqa: BLE001 - unparseable → deterministic fake
-            pass
-    return _fake_samples(payload)
-
-
-def image_stats(media: DataFrame) -> DataFrame:
-    """Per-image pixel statistics. → (media_id, width, height, n_bytes,
-    pixel_mean, pixel_std). Vectorized per Arrow batch."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf[pdf["kind"] == "image"]
-            if pdf.empty:
-                continue
-            rows = []
-            for r in pdf.itertuples(index=False):
-                px = _decode_pixels(r.payload, r.width, r.height)
-                rows.append(
-                    (r.media_id, r.width, r.height, len(r.payload),
-                     float(px.mean()), float(px.std()))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height", "n_bytes",
-                         "pixel_mean", "pixel_std"],
-            )
-
-    return media.mapInPandas(
-        run,
-        schema="media_id long, width int, height int, n_bytes long, "
-        "pixel_mean double, pixel_std double",
-    )
-
-
-def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Nearest-neighbor resize over the (stub-)decoded buffer; payload out is
-    the resized buffer bytes — the batch shape a real resize would have."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf[pdf["kind"] == "image"]
-            if pdf.empty:
-                continue
-            out = []
-            for r in pdf.itertuples(index=False):
-                px = _decode_pixels(r.payload, r.width, r.height)
-                yi = np.linspace(0, px.shape[0] - 1, out_h).astype(int)
-                xi = np.linspace(0, px.shape[1] - 1, out_w).astype(int)
-                out.append((r.media_id, out_w, out_h,
-                            px[np.ix_(yi, xi)].tobytes()))
-            yield pd.DataFrame(
-                out, columns=["media_id", "width", "height", "payload"]
-            )
-
-    return media.mapInPandas(
-        run,
-        schema="media_id long, width int, height int, payload binary",
-    )
-
-
-def sample_frames(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video → one row per sampled frame index (native explode — no Python
-    for the fan-out; frame payload slicing happens vectorized after)."""
-    frames = (
-        media.filter((F.col("kind") == "video") & (F.col("n_frames") > 0))
-        .withColumn(
-            "frame_idx",
-            F.explode(
-                F.sequence(
-                    F.lit(0), F.col("n_frames") - 1, F.lit(every_n)
-                )
-            ),
-        )
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            outs = []
-            for r in pdf.itertuples(index=False):
-                raw = np.frombuffer(r.payload, dtype=np.uint8)
-                n = max(r.n_frames, 1)
-                size = max(raw.size // n, 1)
-                lo = min(r.frame_idx * size, max(raw.size - size, 0))
-                outs.append((r.media_id, int(r.frame_idx),
-                             raw[lo:lo + size].tobytes()))
-            yield pd.DataFrame(
-                outs, columns=["media_id", "frame_idx", "frame_payload"]
-            )
-
-    return frames.mapInPandas(
-        run, schema="media_id long, frame_idx int, frame_payload binary"
-    )
-
-
-def audio_features(media: DataFrame, n_windows: int = 8) -> DataFrame:
-    """Windowed RMS-energy features. → (media_id, features array<double>)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf[pdf["kind"] == "audio"]
-            if pdf.empty:
-                continue
-            rows = []
-            for r in pdf.itertuples(index=False):
-                s = _decode_samples(r.payload)
-                chunks = np.array_split(s, n_windows)
-                feats = [float(np.sqrt((c ** 2).mean())) if c.size else 0.0
-                         for c in chunks]
-                rows.append((r.media_id, feats))
-            yield pd.DataFrame(rows, columns=["media_id", "features"])
-
-    return media.mapInPandas(
-        run, schema="media_id long, features array<double>"
-    )
 
 
 def binary_metadata(
@@ -234,35 +46,4 @@ def binary_metadata(
     ).mapInPandas(
         run,
         schema="id string, n_bytes long, sha_hex string, head_hex string",
-    )
-
-
-def synthetic_media(spark, n: int, partitions: int = 8) -> DataFrame:
-    """Deterministic fake media table (counter-based like sources/synthetic)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["id"].to_numpy()
-            rows = []
-            for i in ids:
-                kind = ["image", "audio", "video"][i % 3]
-                rng = np.random.default_rng(42 + int(i))
-                w, h = int(8 + i % 16), int(8 + (i * 3) % 16)
-                nf = int(5 + i % 20)
-                size = {"image": w * h, "audio": 2048, "video": nf * 64}[kind]
-                rows.append(
-                    (int(i), kind, rng.integers(0, 256, size,
-                                                dtype=np.uint8).tobytes(),
-                     w, h, 16000, nf, {"image": "fake_png",
-                                       "audio": "fake_wav",
-                                       "video": "fake_mp4"}[kind])
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "kind", "payload", "width", "height",
-                         "sample_rate", "n_frames", "fmt"],
-            )
-
-    return spark.range(0, n, numPartitions=partitions).mapInPandas(
-        gen, schema=MEDIA_SCHEMA
     )

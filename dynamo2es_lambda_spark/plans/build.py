@@ -1020,7 +1020,7 @@ def _finalize_store(
         # sortWithinPartitions("term"): no extra exchange (sorts the agg's
         # own output partitions), but each output file becomes term-ordered,
         # so its parquet row-group min/max stats are tight — the query
-        # side's driver-side term lookup (plans/search._term_stats_lookup)
+        # side's driver-side term lookup (sources/store_io.sorted_read)
         # then prunes to the row groups containing the probed terms instead
         # of scanning the vocabulary (guide §6).
         ts = postings.term_stats(blocks).sortWithinPartitions("term")

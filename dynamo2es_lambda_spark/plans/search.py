@@ -53,6 +53,7 @@ from pyspark.sql.window import Window
 
 from ..errors import EngineError
 from ..functions import analysis, bm25, codec
+from ..sources import store_io
 
 RESULT_SCHEMA = "qid long, rank int, doc_id string, score double"
 
@@ -74,8 +75,6 @@ class IndexStore:
         resolving it runs no schema-inference job. This memoizes file
         METADATA only (never rows or results); reload the store after
         apply_changes/compact_store, as for n_dead."""
-        from ..sources import store_io
-
         cache = self.__dict__.setdefault("_seg_cache", {})
         key = spark.sparkContext.applicationId
         df = cache.get(key)
@@ -85,8 +84,6 @@ class IndexStore:
         return df
 
     def postings(self, spark: SparkSession) -> DataFrame:
-        from ..sources import store_io
-
         return store_io.select_blocks(self._segments(spark))
 
     def doc_stats(self, spark: SparkSession) -> DataFrame:
@@ -126,8 +123,6 @@ class IndexStore:
         no Spark job, no row materialization). Cached per store handle;
         reload the store after apply_changes/compact_store."""
         if self._n_dead is None:
-            from ..sources import store_io
-
             self._n_dead = store_io.parquet_num_rows(
                 os.path.join(self.path, "dead")
             )
@@ -754,8 +749,6 @@ def _segment_constraints(
     the constraint rows reach exactly the scorer group that will decode the
     doc. Volume = |constrained docs| × |queries|: queries are few in batch
     analytics and the crossJoin broadcasts the tiny qid side."""
-    from ..sources import store_io
-
     parts = []
     if index is not None:
         doc_rows = store.doc_rows(
@@ -1081,88 +1074,6 @@ def search_more_like_this(
     return _present(spark, store, _cut_topk(agg, k), k)
 
 
-def _arrow_isin_read(
-    path: str, key_col: str, keys: list, cols: tuple[str, ...] | None = None
-) -> pd.DataFrame | None:
-    """Driver-side pyarrow point read of ``keys`` from a parquet directory
-    whose files are sorted by ``key_col`` (row-group min/max statistics
-    prune the scan to the groups that can contain the probed keys — the
-    same point-read shape at any table size). Returns None when the layout
-    is missing or not parquet (``OSError`` / ``ArrowInvalid``) so callers
-    fall back to the Spark read; any other error is a bug and propagates.
-    Replaces one whole Spark job (scan + filter + toPandas ≈ a scheduling
-    floor) per lookup."""
-    import pyarrow as pa
-    import pyarrow.dataset as pads
-
-    try:
-        files = []
-        for root, _dirs, fns in os.walk(path):
-            files.extend(
-                os.path.join(root, f) for f in fns if f.endswith(".parquet")
-            )
-        if not files:
-            return None
-        dset = pads.dataset(sorted(files), format="parquet")
-        use = [
-            c for c in (cols or dset.schema.names)
-            if c in dset.schema.names
-        ]
-        return dset.to_table(
-            columns=use, filter=pads.field(key_col).isin(keys)
-        ).to_pandas()
-    except (OSError, pa.ArrowInvalid):
-        return None
-
-
-def _prefix_range_count(store: IndexStore, fp: str) -> float | None:
-    """Driver-side count of a field's qualified terms: the dictionary is
-    ASCII and term-sorted, so the count is a row-group-pruned pyarrow
-    count over the key range [fp, fp + 0x7f). None → Spark fallback."""
-    try:
-        if not fp or any(ord(c) >= 0x7F for c in fp):
-            return None
-        import pyarrow.dataset as pads
-
-        path = os.path.join(store.path, "term_stats")
-        files = []
-        for root, _dirs, fns in os.walk(path):
-            files.extend(
-                os.path.join(root, f) for f in fns if f.endswith(".parquet")
-            )
-        if not files:
-            return None
-        dset = pads.dataset(sorted(files), format="parquet")
-        return float(
-            dset.count_rows(
-                filter=(pads.field("term") >= fp)
-                & (pads.field("term") < fp + "\x7f")
-            )
-        )
-    except Exception:  # noqa: BLE001
-        return None
-
-
-def _term_stats_lookup(
-    spark: SparkSession, store: IndexStore, terms: list[str]
-) -> pd.DataFrame:
-    """Point lookup of ≤|query terms| rows from the term_stats table —
-    driver-side via :func:`_arrow_isin_read` (term_stats files are
-    term-sorted, plans/build._finalize_store), Spark fallback for
-    non-parquet stores."""
-    got = _arrow_isin_read(
-        os.path.join(store.path, "term_stats"), "term", terms,
-        cols=("term", "df", "term_bucket"),
-    )
-    if got is not None:
-        return got
-    return (
-        store.term_stats(spark)
-        .filter(F.col("term").isin(terms))
-        .toPandas()
-    )
-
-
 def _join_term_stats(
     spark: SparkSession,
     store: IndexStore,
@@ -1171,8 +1082,18 @@ def _join_term_stats(
 ) -> pd.DataFrame:
     """Attach df(t) and the storage bucket to the query-term table via one
     targeted term_stats read (metadata-sized). Terms absent from the index
-    get df = NaN. Tolerates legacy stores without the term_bucket column."""
-    ts = _term_stats_lookup(spark, store, terms).set_index("term")
+    get df = NaN. Tolerates legacy stores without the term_bucket column.
+    The read is driver-side (:func:`store_io.sorted_read` over the
+    term-sorted files, plans/build._finalize_store); stores pyarrow cannot
+    read take one Spark filter job instead."""
+    ts = store_io.sorted_read(
+        os.path.join(store.path, "term_stats"), "term",
+        ("term", "df", "term_bucket"), keys=terms,
+    )
+    if ts is None:
+        ts = store.term_stats(spark).filter(F.col("term").isin(terms))
+        ts = ts.toPandas()
+    ts = ts.set_index("term")
     qt = qt.copy()
     qt["df"] = qt["term"].map(ts["df"]) if len(ts) else float("nan")
     if "term_bucket" in ts.columns and len(ts):
@@ -1299,61 +1220,38 @@ def _expand_startswith(
     max_expansions: int | None,
 ) -> pd.DataFrame:
     """Prefix-anchored dictionary expansion, driver-side: for each
-    (qid, prefix) read the term_stats rows in the key range
-    [prefix, prefix + chr(0x7f)) via pyarrow — row-group min/max statistics
-    on the term-sorted files prune the read to the matching groups, the
-    same point-read shape as _term_stats_lookup — cap term-ascending at
-    ``max_expansions``, and return (qid, term, df[, bucket]). For the
-    analyzer's ASCII term space the range IS the startswith predicate
-    (checked again pandas-side); prefixes containing non-ASCII fall back
-    to the JVM dictionary-scan join, as does any arrow-side surprise.
-    Replaces one whole Spark job (broadcast join + window + collect) per
-    expansion family call."""
+    (qid, prefix) the first ``max_expansions`` term_stats rows starting with
+    the prefix, term-ascending, from one bounded :func:`store_io.sorted_read`
+    per distinct prefix (row-group statistics prune to the matching groups
+    and the read stops at the cap) → (qid, term, df[, bucket]). When the
+    reader refuses (a non-ASCII prefix) or cannot read the layout, the
+    whole call takes the JVM dictionary-scan join instead. Replaces one
+    whole Spark job (broadcast join + window + collect) per expansion
+    family call."""
     path = os.path.join(store.path, "term_stats")
-    uniq = sorted(set(pats["prefix"]))
-    try:
-        if any((not p) or any(ord(c) >= 0x7F for c in p) for p in uniq):
-            raise ValueError("non-ASCII prefix")
-        import pyarrow.dataset as pads
-
-        files = []
-        for root, _dirs, fns in os.walk(path):
-            files.extend(
-                os.path.join(root, f) for f in fns if f.endswith(".parquet")
-            )
-        dset = pads.dataset(sorted(files), format="parquet")
-        cols = [c for c in ("term", "df", "term_bucket")
-                if c in dset.schema.names]
-        by_prefix: dict[str, pd.DataFrame] = {}
-        for p in uniq:
-            tbl = dset.to_table(
-                columns=cols,
-                filter=(pads.field("term") >= p)
-                & (pads.field("term") < p + "\x7f"),
-            ).to_pandas()
-            tbl = tbl[tbl["term"].str.startswith(p)].sort_values(
-                "term", kind="mergesort", ignore_index=True
-            )
-            if max_expansions is not None:
-                tbl = tbl.head(int(max_expansions))
-            by_prefix[p] = tbl
-        outs = []
-        for qid, p in zip(pats["qid"], pats["prefix"]):
-            t = by_prefix[p].copy()
-            t.insert(0, "qid", int(qid))
-            outs.append(t)
-        out = pd.concat(outs, ignore_index=True)
-        if "term_bucket" in out.columns:
-            out = out.rename(columns={"term_bucket": "bucket"})
-        return out
-    except Exception:  # noqa: BLE001 — JVM dictionary-scan fallback
-        hit = store.term_stats(spark).join(
-            F.broadcast(spark.createDataFrame(pats[["qid", "prefix"]])),
-            F.col("term").startswith(F.col("prefix")),
+    by_prefix = {
+        p: store_io.sorted_read(
+            path, "term", ("term", "df", "term_bucket"), prefix=p,
+            limit=None if max_expansions is None else int(max_expansions),
         )
-        return _collect_expansion(
-            hit, "prefix", [F.col("term").asc()], max_expansions
+        for p in set(pats["prefix"])
+    }
+    if by_prefix and all(t is not None for t in by_prefix.values()):
+        out = pd.concat(
+            [by_prefix[p].assign(qid=int(q))
+             for q, p in zip(pats["qid"], pats["prefix"])],
+            ignore_index=True,
         )
+        return out[["qid", *out.columns[:-1]]].rename(
+            columns={"term_bucket": "bucket"}
+        )
+    hit = store.term_stats(spark).join(
+        F.broadcast(spark.createDataFrame(pats[["qid", "prefix"]])),
+        F.col("term").startswith(F.col("prefix")),
+    )
+    return _collect_expansion(
+        hit, "prefix", [F.col("term").asc()], max_expansions
+    )
 
 
 def search_prefix(
@@ -3844,14 +3742,14 @@ def suggest_phrase(
     # footer count on a multi-field store would count every field's
     # qualified terms and skew the add-k probabilities), T = the field's
     # token total
-    from ..sources import store_io
-
     if fp:
         flds = store.meta.get("fields") or []
         fidx = flds.index(fp[:-1])
-        V = _prefix_range_count(store, fp)
-        if V is None:
-            V = float(ts.count())
+        V = store_io.sorted_read(
+            os.path.join(store.path, "term_stats"), "term",
+            prefix=fp, count=True,
+        )
+        V = float(ts.count() if V is None else V)
         fsums = store.meta.get("field_dl_sums")
         if fsums is not None:
             T = float(fsums[fidx])
@@ -3898,9 +3796,9 @@ def suggest_phrase(
         # the range-sorted gram column prunes row groups, so the read is
         # candidate-sized regardless of corpus size
         need = [fp + t for t in need_terms] + [fp + b for b in need_bigrams]
-        got = _arrow_isin_read(
-            os.path.join(store.path, "lm_stats"), "gram", need,
-            cols=("gram", "cf"),
+        got = store_io.sorted_read(
+            os.path.join(store.path, "lm_stats"), "gram", ("gram", "cf"),
+            keys=need,
         )
         if got is None:
             got = (
@@ -5310,8 +5208,6 @@ def _termvectors_resolved(
         return spark.createDataFrame(
             [], "doc_id string, term string, tf long, df long"
         )
-    import numpy as _np
-
     tpdf = pd.DataFrame(
         {"doc_int": rows["doc_int"].astype("int64"),
          "t_seg": rows["seg"].astype("int64")}
@@ -5323,16 +5219,16 @@ def _termvectors_resolved(
     # doc_ints spread over the whole int64 space, so a block's
     # [doc_first, doc_last] range covers almost every wanted id in its
     # segment and the old join emitted one row — and one FULL block
-    # decode — per (block, wanted id) pair. Now each block is decoded
-    # ONCE and all wanted ids resolve with one vectorized searchsorted
-    # (guide §4.2); the range check happens against the want array
-    # before any decode, so blocks with no wanted doc skip the codec
-    # entirely. Output rows are identical: within a (term, seg) the
-    # blocks partition the sorted doc space, so each wanted id matches
-    # at most one block per term.
+    # decode — per (block, wanted id) pair. Now each Arrow batch's
+    # blocks decode in ONE codec.decode_blocks call and all wanted ids
+    # resolve with vectorized searchsorted (guide §4.2); the range check
+    # happens against the want array before any decode, so blocks with
+    # no wanted doc skip the codec entirely. Output rows are identical:
+    # within a (term, seg) the blocks partition the sorted doc space, so
+    # each wanted id matches at most one block per term.
     wants_by_seg = {
-        int(s): _np.sort(
-            tpdf.loc[tpdf["t_seg"] == s, "doc_int"].to_numpy(_np.int64)
+        int(s): np.sort(
+            tpdf.loc[tpdf["t_seg"] == s, "doc_int"].to_numpy(np.int64)
         )
         for s in segs
     }
@@ -5340,41 +5236,42 @@ def _termvectors_resolved(
         store.postings(spark)
         .filter(F.col("seg").isin(segs))
         .select(
-            "term", "seg", "doc_first", "doc_last",
-            "doc_bytes", "tf_bytes", "dl_bytes",
+            "term", "seg", "n_docs", "doc_first", "doc_last",
+            "doc_bytes", "tf_bytes",
         )
     )
 
     def run(batches):
-        import numpy as np
-
         for pdf in batches:
-            outs = []
-            for row in pdf.itertuples(index=False):
-                wants = wants_by_seg.get(int(row.seg))
-                if wants is None:
-                    continue
-                lo = np.searchsorted(wants, row.doc_first, side="left")
-                hi = np.searchsorted(wants, row.doc_last, side="right")
-                if lo >= hi:
-                    continue  # no wanted doc in this block's range
-                cand_ints = wants[lo:hi]
-                d_ids, tfs, _dls = codec.decode_block(
-                    row.doc_first, row.doc_bytes, row.tf_bytes, row.dl_bytes
+            seg = pdf["seg"].to_numpy(np.int64)
+            first = pdf["doc_first"].to_numpy(np.int64)
+            last = pdf["doc_last"].to_numpy(np.int64)
+            in_range = np.zeros(len(pdf), bool)
+            for s in np.unique(seg):
+                wants, m = wants_by_seg[int(s)], seg == s
+                in_range[m] = np.searchsorted(wants, first[m]) < (
+                    np.searchsorted(wants, last[m], "right")
                 )
-                pos = np.searchsorted(d_ids, cand_ints)
-                pos_c = np.minimum(pos, len(d_ids) - 1)
-                ok = d_ids[pos_c] == cand_ints
-                if ok.any():
-                    outs.append(
-                        pd.DataFrame(
-                            {"doc_int": cand_ints[ok].astype("int64"),
-                             "term": row.term,
-                             "tf": tfs[pos_c[ok]].astype("int64")}
-                        )
-                    )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+            blk = pdf[in_range]  # blocks holding a wanted doc
+            if not len(blk):
+                continue
+            # one batched decode for every such block; a decoded doc is
+            # kept when it is one of its segment's wanted ids
+            counts = blk["n_docs"].to_numpy(np.int64)
+            ids, tfs, _ = codec.decode_blocks(blk)
+            doc_seg = np.repeat(blk["seg"].to_numpy(np.int64), counts)
+            terms = np.repeat(blk["term"].to_numpy(object), counts)
+            ok = np.zeros(len(ids), bool)
+            for s in np.unique(doc_seg):
+                wants, m = wants_by_seg[int(s)], doc_seg == s
+                pos = np.searchsorted(wants, ids[m])
+                ok[m] = wants[np.minimum(pos, len(wants) - 1)] == ids[m]
+            if ok.any():
+                yield pd.DataFrame(
+                    {"doc_int": ids[ok],
+                     "term": terms[ok],
+                     "tf": tfs[ok]}
+                )
 
     decoded = blocks.mapInPandas(
         run, schema="doc_int long, term string, tf long"

@@ -8,6 +8,8 @@ directory-partitioned parquet with the same structure (SURVEY.md §4.2(c)).
 
 from __future__ import annotations
 
+import bisect
+import contextlib
 import json
 import os
 
@@ -82,19 +84,109 @@ def write_parquet(
     w.save(path)
 
 
+def parquet_files(path: str) -> list[str]:
+    """Every ``.parquet`` file under a directory tree, path-sorted — the
+    one file listing of a store table; [] for a missing directory."""
+    return sorted(
+        os.path.join(root, fn)
+        for root, _dirs, fns in os.walk(path)
+        for fn in fns
+        if fn.endswith(".parquet")
+    )
+
+
 def parquet_num_rows(path: str) -> int:
     """Row count of a parquet directory from file FOOTERS only — a driver
     metadata read, no Spark job, no row materialization. 0 for a missing
     directory."""
     import pyarrow.parquet as pq
 
-    n = 0
-    if os.path.isdir(path):
-        for root, _dirs, files in os.walk(path):
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    n += pq.read_metadata(os.path.join(root, fn)).num_rows
-    return n
+    return sum(pq.read_metadata(f).num_rows for f in parquet_files(path))
+
+
+def sorted_read(
+    path: str,
+    key_col: str,
+    cols: tuple[str, ...] = (),
+    *,
+    keys: list | None = None,
+    prefix: str | None = None,
+    count: bool = False,
+    limit: int | None = None,
+):
+    """Driver-side read of a parquet table whose files are sorted by
+    ``key_col`` (term_stats by term, lm_stats by gram), pruned by row-group
+    key statistics: no Spark job, the same cost at any table size.
+    ``keys``: the rows whose key is listed, in file order. ``prefix``: the
+    rows whose key starts with it, key-ascending — the key range
+    ``[p, p + "\\x7f")`` of an ASCII prefix; an empty or non-ASCII one is
+    refused. ``limit`` keeps the first ``limit`` prefix rows, reading the
+    matching groups by ascending key minimum (no statistics first) until
+    ``limit`` rows are held and the next minimum is above the ``limit``-th
+    held key — the unbounded read's rows on any layout. ``count``: the
+    match count. ``cols`` projects, skipping absent ones (legacy layouts).
+    None means "take the Spark read": a refused prefix, a missing table, or
+    an ``OSError`` / ``ArrowInvalid`` layout; any other error propagates."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    if prefix is not None and (not prefix or max(map(ord, prefix)) >= 0x7F):
+        return None
+    files = parquet_files(path)
+    if not files:
+        return None
+    want = None if keys is None else sorted(keys)
+    lo, hi = prefix, f"{prefix}\x7f"
+
+    def can_match(mn, mx) -> bool:
+        if want is None:
+            return mn < hi and mx >= lo
+        return bisect.bisect_right(want, mx) > bisect.bisect_left(want, mn)
+
+    try:
+        with contextlib.ExitStack() as stack:
+            pfs = [stack.enter_context(pq.ParquetFile(f)) for f in files]
+            groups = []  # (key min | None, file, row group) that can match
+            for fi, pf in enumerate(pfs):
+                ki = pf.schema_arrow.get_field_index(key_col)
+                for gi in range(pf.metadata.num_row_groups):
+                    st = pf.metadata.row_group(gi).column(ki).statistics
+                    if st is None or not st.has_min_max:
+                        groups.append((None, fi, gi))
+                    elif can_match(st.min, st.max):
+                        groups.append((st.min, fi, gi))
+            groups.sort(key=lambda g: (g[0] is not None, g[0] or "", *g[1:]))
+            names = pfs[0].schema_arrow.names
+            use = [key_col] if count else [c for c in cols if c in names]
+            held, kth = [], None
+            for gmin, fi, gi in groups:
+                if kth is not None and gmin is not None and gmin > kth:
+                    break
+                t = pfs[fi].read_row_group(gi, columns=use)
+                k = t[key_col]
+                held.append((fi, gi, t.filter(
+                    pc.and_(pc.greater_equal(k, lo), pc.less(k, hi))
+                    if want is None else pc.is_in(k, pa.array(want, k.type))
+                )))
+                if limit and sum(h[2].num_rows for h in held) >= limit:
+                    kth = sorted(
+                        x for h in held for x in h[2][key_col].to_pylist()
+                    )[limit - 1]
+            out = pa.concat_tables(
+                [h[2] for h in sorted(held, key=lambda h: h[:2])]
+                or [pfs[0].schema_arrow.empty_table().select(use)]
+            )
+    except (OSError, pa.ArrowInvalid):
+        return None
+    if count:
+        return out.num_rows
+    out = out.to_pandas()
+    if prefix is None:
+        return out
+    return out.sort_values(
+        key_col, kind="mergesort", ignore_index=True
+    ).iloc[:limit]
 
 
 def segments_path(store_path: str) -> str:

@@ -1,97 +1,21 @@
-"""Multimodal plumbing: binary columns through Arrow, typed metadata,
-frame fan-out, determinism under re-partitioning (decode itself is the
-documented deterministic stub)."""
+"""Multimodal plumbing: an opaque binary column through Arrow to typed
+metadata (operators/multimodal.binary_metadata)."""
 
-import numpy as np
-import pytest
+import hashlib
 
 from dynamo2es_lambda_spark.operators import multimodal as mm
 
 
-@pytest.fixture(scope="module")
-def media(spark):
-    return mm.synthetic_media(spark, 60, partitions=4)
-
-
-def test_image_stats(spark, media):
-    out = mm.image_stats(media).toPandas().sort_values("media_id")
-    assert len(out) == 20  # every 3rd id is an image
-    assert (out["n_bytes"] == out["width"] * out["height"]).all()
-    assert ((out["pixel_mean"] >= 0) & (out["pixel_mean"] <= 255)).all()
-    assert out["pixel_std"].gt(0).all()
-
-
-def test_resize_images(spark, media):
-    out = mm.resize_images(media, 4, 6).toPandas()
-    assert len(out) == 20
-    assert (out["width"] == 4).all() and (out["height"] == 6).all()
-    assert all(len(p) == 24 for p in out["payload"])
-
-
-def test_sample_frames(spark, media):
-    out = mm.sample_frames(media, every_n=5).toPandas()
-    vids = out.groupby("media_id").size()
-    # video ids are 2, 5, 8, ... with n_frames = 5 + id % 20
-    for mid, cnt in vids.items():
-        nf = 5 + mid % 20
-        assert cnt == len(range(0, nf, 5))
-    assert all(len(p) > 0 for p in out["frame_payload"])
-
-
-def test_audio_features(spark, media):
-    out = mm.audio_features(media, n_windows=8).toPandas()
-    assert len(out) == 20
-    assert all(len(f) == 8 for f in out["features"])
-    assert all(0.0 < v < 1.5 for f in out["features"] for v in f)
-
-
-def test_deterministic_under_partitioning(spark):
-    a = mm.image_stats(mm.synthetic_media(spark, 30, partitions=2)).toPandas()
-    b = mm.image_stats(mm.synthetic_media(spark, 30, partitions=7)).toPandas()
-    a = a.sort_values("media_id", ignore_index=True)
-    b = b.sort_values("media_id", ignore_index=True)
-    assert a.equals(b)
-
-
-def test_real_codecs_flag_derived_from_imports():
-    """_REAL_CODECS reflects what actually imported, never a hand flag."""
-    from dynamo2es_lambda_spark.operators import multimodal as mm
-
-    assert mm._REAL_CODECS == (mm._HAS_PIL or mm._HAS_SOUNDFILE)
-
-
-def test_real_png_roundtrip_when_pil_present(spark):
-    """Whichever codec path exists is exercised: with PIL, a real 3x2 PNG
-    decodes to its true dimensions; without, the deterministic fake covers
-    the same call (the other tests in this module)."""
-    from dynamo2es_lambda_spark.operators import multimodal as mm
-
-    if not mm._HAS_PIL:
-        import pytest
-
-        pytest.skip("PIL not installed in this environment")
-    import io
-
-    import numpy as np
-
-    buf = io.BytesIO()
-    arr = np.arange(6, dtype=np.uint8).reshape(2, 3)
-    mm._PIL_Image.fromarray(arr, mode="L").save(buf, format="PNG")
-    px = mm._decode_pixels(buf.getvalue(), 3, 2)
-    assert px.shape == (2, 3)
-    assert np.array_equal(px, arr)
-
-
-def test_unparseable_payload_falls_back_to_fake():
-    """Bytes that are not an encoded image/audio stream decode via the
-    deterministic fake on BOTH codec paths — synthetic tests stay stable
-    whether or not the real libraries are installed."""
-    import numpy as np
-
-    from dynamo2es_lambda_spark.operators import multimodal as mm
-
-    payload = bytes(range(10))
-    px = mm._decode_pixels(payload, 5, 2)
-    assert np.array_equal(px, mm._fake_pixels(payload, 5, 2))
-    sm = mm._decode_samples(payload)
-    assert np.array_equal(sm, mm._fake_samples(payload))
+def test_binary_metadata_length_digest_head(spark):
+    payloads = {1: b"", 2: b"\x00\xffabc", 3: bytes(range(40))}
+    df = spark.createDataFrame(
+        list(payloads.items()), "media_id long, payload binary"
+    )
+    got = {
+        r["id"]: (r["n_bytes"], r["sha_hex"], r["head_hex"])
+        for r in mm.binary_metadata(df, "media_id").collect()
+    }
+    assert got == {
+        str(i): (len(p), hashlib.sha256(p).hexdigest(), p[:16].hex())
+        for i, p in payloads.items()
+    }

@@ -11,6 +11,7 @@ import pytest
 
 from dynamo2es_lambda_spark import IndexerConfig
 from dynamo2es_lambda_spark.plans import build, search
+from dynamo2es_lambda_spark.sources import store_io
 
 CFG = IndexerConfig(index="code")
 
@@ -251,23 +252,146 @@ def test_literal_term_map_escapes_round_trip(spark, mf_store, monkeypatch):
 def test_arrow_point_read_falls_back_only_on_layout_errors(
     tmp_path, monkeypatch
 ):
-    """A missing or non-parquet layout → None (the caller's Spark read);
-    any other error inside the fast path propagates."""
-    import pyarrow.dataset as pads
+    """A missing or non-parquet layout, or a refused prefix (empty or
+    non-ASCII) → None (the caller's Spark read); any other error inside
+    the reader propagates — in keys, prefix and count modes alike."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    assert search._arrow_isin_read(str(tmp_path / "nope"), "term", ["a"]) \
-        is None
+    read = store_io.sorted_read
+    modes = (
+        dict(keys=["a"]), dict(prefix="a"), dict(prefix="a", count=True)
+    )
     bad = tmp_path / "bad"
     bad.mkdir()
     (bad / "part-0.parquet").write_bytes(b"not a parquet file")
-    assert search._arrow_isin_read(str(bad), "term", ["a"]) is None
+    good = tmp_path / "good"
+    good.mkdir()
+    pq.write_table(
+        pa.table({"term": ["a", "ab", "b"], "df": [1, 2, 3]}),
+        str(good / "part-0.parquet"),
+    )
+    for kw in modes:
+        assert read(str(tmp_path / "nope"), "term", **kw) is None
+        assert read(str(bad), "term", **kw) is None
+    assert read(str(good), "term", prefix="a", count=True) == 2
+    for p in ("", "caf\u00e9"):
+        assert read(str(good), "term", prefix=p) is None
+        assert read(str(good), "term", prefix=p, count=True) is None
 
     def broken(*args, **kwargs):
         raise TypeError("injected fast-path bug")
 
+    monkeypatch.setattr(pq, "ParquetFile", broken)
+    for kw in modes:
+        with pytest.raises(TypeError, match="injected fast-path bug"):
+            read(str(good), "term", **kw)
+
+
+def test_dictionary_read_bug_propagates_out_of_search_prefix(
+    spark, store, monkeypatch
+):
+    """A bug inside the driver-side dictionary read surfaces instead of
+    silently taking the JVM dictionary-scan path, whichever pyarrow entry
+    point (file or dataset API) the read goes through."""
+    import pyarrow.dataset as pads
+    import pyarrow.parquet as pq
+
+    def broken(*args, **kwargs):
+        raise TypeError("injected reader bug")
+
+    monkeypatch.setattr(pq, "ParquetFile", broken)
     monkeypatch.setattr(pads, "dataset", broken)
-    with pytest.raises(TypeError, match="injected fast-path bug"):
-        search._arrow_isin_read(str(bad), "term", ["a"])
+    with pytest.raises(TypeError, match="injected reader bug"):
+        search.search_prefix(
+            spark, store, pd.DataFrame({"qid": [0], "prefix": ["de"]})
+        )
+
+
+def _dictionary(root, layout):
+    """Two 30-row-group files of 10 terms each over t0000..t0599, files
+    interleaved (each file term-sorted, as Spark writes term_stats);
+    ``layout="shuffled"`` shuffles the second file, ``"nostats"`` writes
+    it without statistics."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root.mkdir()
+    terms = np.array([f"t{i:04d}" for i in range(600)], dtype=object)
+    for f in range(2):
+        t = terms[f::2]
+        if f and layout == "shuffled":
+            t = np.random.default_rng(7).permutation(t)
+        pq.write_table(
+            pa.table({"term": list(t), "df": np.arange(len(t)) + f}),
+            str(root / f"part-{f}.parquet"), row_group_size=10,
+            write_statistics=not (f and layout == "nostats"),
+        )
+    return str(root)
+
+
+@pytest.mark.parametrize("layout", ["sorted", "shuffled", "nostats"])
+def test_sorted_read_matches_pandas_reference(tmp_path, layout):
+    """Every mode equals a pandas filter over the whole table: keys in
+    file order, prefix key-ascending, and the bounded prefix read equals
+    the head of the unbounded one, whatever the layout."""
+    import pyarrow.parquet as pq
+
+    path = _dictionary(tmp_path / "ts", layout)
+    every = pd.concat(
+        [pq.read_table(f).to_pandas() for f in store_io.parquet_files(path)],
+        ignore_index=True,
+    )
+    cols = ("term", "df")
+    keys = ["t0450", "t0003", "t0451", "zz"]
+    pd.testing.assert_frame_equal(
+        store_io.sorted_read(path, "term", cols, keys=keys),
+        every[every["term"].isin(keys)].reset_index(drop=True),
+    )
+    for prefix in ("t", "t01", "t059", "t1", "u"):
+        full = every[every["term"].str.startswith(prefix)].sort_values(
+            "term", kind="mergesort", ignore_index=True
+        )
+        assert store_io.sorted_read(
+            path, "term", prefix=prefix, count=True
+        ) == len(full)
+        for limit in (None, 1, 5, 11, 25, 1000):
+            pd.testing.assert_frame_equal(
+                store_io.sorted_read(
+                    path, "term", cols, prefix=prefix, limit=limit
+                ),
+                full.iloc[:limit],
+            )
+
+
+def test_prefix_expansion_reads_bounded_row_groups(
+    spark, tmp_path, monkeypatch
+):
+    """A hot prefix over a 60-row-group term-sorted dictionary reads the
+    row groups that can hold its first max_expansions terms, not the
+    whole key range."""
+    import types
+
+    import pyarrow.parquet as pq
+
+    store_path = tmp_path / "store"
+    store_path.mkdir()
+    _dictionary(store_path / "term_stats", "sorted")
+    reads = []
+    real = pq.ParquetFile.read_row_group
+
+    def spy(self, i, *args, **kwargs):
+        reads.append(i)
+        return real(self, i, *args, **kwargs)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_group", spy)
+    out = search._expand_startswith(
+        spark, types.SimpleNamespace(path=str(store_path)),
+        pd.DataFrame({"qid": [0, 1], "prefix": ["t", "t"]}), 5,
+    )
+    assert list(out["term"]) == [f"t{i:04d}" for i in range(5)] * 2
+    assert list(out["qid"]) == [0] * 5 + [1] * 5
+    assert 0 < len(reads) <= 2
 
 
 def test_wand_single_term_job_count(spark, store):
