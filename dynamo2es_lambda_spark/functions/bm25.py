@@ -13,6 +13,12 @@ by construction.
   idf(t)      = ln(1 + (N - df + 0.5) / (df + 0.5))          (Lucene BM25)
   score(t, d) = idf(t) * tf * (k1 + 1) / (tf + k1 * (1 - b + b * dl / avgdl))
 
+The engine splits the score into a per-query-term weight and a per-posting
+factor: ``query_weight`` = idf(t) * (k1 + 1) * qtf is computed once per
+(query, term) before any posting is read, and every scorer multiplies it by
+``tf_norm`` per posting. Callers never retype either expression, so the
+operation order (and thus every score bit) is fixed here.
+
 Determinism: float64 throughout; multi-term scores are summed in ascending
 term order (both engine and oracles sort terms before accumulating).
 """
@@ -31,15 +37,24 @@ def idf(n_docs: float, df) -> np.ndarray:
     return np.log1p((float(n_docs) - df + 0.5) / (df + 0.5))
 
 
-def tf_norm(tf, dl, avgdl: float, k1: float = K1, b: float = B) -> np.ndarray:
+def query_weight(n_docs: float, df, qtf=1.0) -> np.ndarray:
+    """Per-(query, term) weight idf(t) * (k1 + 1) * qtf, in that order.
+    Vectorized over ``df`` and ``qtf``; a boost multiplies the result."""
+    return idf(n_docs, df) * (K1 + 1.0) * qtf
+
+
+def tf_norm(tf, dl, avgdl, k1: float = K1, b: float = B) -> np.ndarray:
     """tf / (tf + k1*(1 - b + b*dl/avgdl)) — the doc-dependent factor.
 
-    Monotone increasing in tf, decreasing in dl: the block-max bound
-    uses tf_norm(max_tf, min_dl) (functions/codec.py block metadata).
+    ``avgdl`` is a scalar or an array parallel to ``tf`` (per-term field
+    averages of a multi-field query). Monotone increasing in tf,
+    decreasing in dl: the block-max bound uses tf_norm(max_tf, min_dl)
+    (functions/codec.py block metadata).
     """
     tf = np.asarray(tf, dtype=np.float64)
     dl = np.asarray(dl, dtype=np.float64)
-    return tf / (tf + k1 * (1.0 - b + b * dl / float(avgdl)))
+    avgdl = np.asarray(avgdl, dtype=np.float64)
+    return tf / (tf + k1 * (1.0 - b + b * dl / avgdl))
 
 
 def score(tf, dl, df, n_docs: float, avgdl: float,

@@ -363,11 +363,7 @@ def search_as_of(
     qt = qt.copy()
     from ..functions import bm25
 
-    qt["w"] = (
-        bm25.idf(n_docs, qt["df"].to_numpy())
-        * (bm25.K1 + 1.0)
-        * qt["qtf"].to_numpy()
-    )
+    qt["w"] = bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
     joined = search._matched_blocks(spark, store, qt)
     cand = search._score_exhaustive(joined, avgdl)
     agg = cand.groupBy("qid", "doc_int").agg(F.sum("score").alias("score"))

@@ -56,6 +56,8 @@ from ..functions import analysis, bm25, codec
 from ..sources import store_io
 
 RESULT_SCHEMA = "qid long, rank int, doc_id string, score double"
+# per-posting / per-candidate rows of every Python scoring kernel
+_SCORES_SCHEMA = "qid long, doc_int long, score double"
 
 
 @dataclass
@@ -230,6 +232,8 @@ def search(
     candidates below the cursor before they may set the heap threshold,
     so deep pages keep block-max pruning instead of falling back to an
     exhaustive scan."""
+    if mode not in ("or", "and"):
+        raise ValueError(f"unknown mode {mode!r}: expected 'or' or 'and'")
     n_docs = float(store.meta["n_docs"])
     prefix, avgdl = _field_of(store, field)
     qt = _query_terms(queries)
@@ -247,11 +251,7 @@ def search(
     qt = qt.dropna(subset=["df"])
     if qt.empty:
         return spark.createDataFrame([], RESULT_SCHEMA)
-    qt["w"] = (
-        bm25.idf(n_docs, qt["df"].to_numpy())
-        * (bm25.K1 + 1.0)
-        * qt["qtf"].to_numpy()
-    )
+    qt["w"] = bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
 
     joined = _matched_blocks(spark, store, qt)
 
@@ -281,8 +281,6 @@ def search(
                 F.col("nt") == F.col("need")
             )
     elif algo == "wand":
-        if mode not in ("or", "and"):
-            raise ValueError(f"wand algo: unknown mode {mode!r}")
         constraints = None
         if index is not None or store.n_dead():
             constraints = _segment_constraints(
@@ -459,9 +457,7 @@ def multi_match(
         return spark.createDataFrame([], RESULT_SCHEMA)
     qt = qt.copy()
     qt["w"] = (
-        bm25.idf(n_docs, qt["df"].to_numpy())
-        * (bm25.K1 + 1.0)
-        * qt["qtf"].to_numpy()
+        bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
         * qt["boost"].to_numpy()
     )
     joined = _matched_blocks(spark, store, qt)
@@ -580,10 +576,7 @@ def search_synonyms(
     )
     live_gids = set(df_max.index)
     wrows = [
-        (g, rq, float(
-            bm25.idf(n_docs, np.array([df_max[g]]))[0]
-            * (bm25.K1 + 1.0) * qtf
-        ))
+        (g, rq, float(bm25.query_weight(n_docs, df_max[g], qtf)))
         for g, rq, qtf in gmeta
         if g in live_gids
     ]
@@ -903,11 +896,7 @@ def _bool_match_scores(
     if qt.empty:
         return None
     n_docs = float(store.meta["n_docs"])
-    qt["w"] = (
-        bm25.idf(n_docs, qt["df"].to_numpy())
-        * (bm25.K1 + 1.0)
-        * qt["qtf"].to_numpy()
-    )
+    qt["w"] = bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
 
     joined = _matched_blocks(spark, store, qt)
     cand = _score_exhaustive(joined, avgdl)
@@ -1062,11 +1051,7 @@ def search_more_like_this(
         .head(max_query_terms)
     )
     qt = qt.copy()
-    qt["w"] = (
-        bm25.idf(n_docs, qt["df"].to_numpy())
-        * (bm25.K1 + 1.0)
-        * qt["qtf"].to_numpy()
-    )
+    qt["w"] = bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
     joined = _matched_blocks(spark, store, qt)
     cand = _score_exhaustive(joined, mlt_avgdl)
     agg = cand.groupBy("qid", "doc_int").agg(F.sum("score").alias("score"))
@@ -1179,7 +1164,7 @@ def _score_expansion(
     if avgdl is None:
         avgdl = float(store.meta["avgdl"])
     qt = qt.copy()
-    qt["w"] = bm25.idf(n_docs, qt["df"].to_numpy()) * (bm25.K1 + 1.0)
+    qt["w"] = bm25.query_weight(n_docs, qt["df"])
     joined = _matched_blocks(spark, store, qt)
     cand = _score_exhaustive(joined, avgdl)
     agg = cand.groupBy("qid", "doc_int").agg(F.sum("score").alias("score"))
@@ -1344,11 +1329,7 @@ def search_match_bool_prefix(
     qt = (
         qt.groupby(["qid", "term"], as_index=False).agg(agg_cols)
     )
-    qt["w"] = (
-        bm25.idf(n_docs, qt["df"].to_numpy())
-        * (bm25.K1 + 1.0)
-        * qt["qtf"].to_numpy()
-    )
+    qt["w"] = bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
     joined = _matched_blocks(spark, store, qt)
     cand = _score_exhaustive(joined, avgdl)
     agg = cand.groupBy("qid", "doc_int").agg(F.sum("score").alias("score"))
@@ -1447,11 +1428,7 @@ def search_as_you_type(
     if qt.empty:
         return spark.createDataFrame([], RESULT_SCHEMA)
     qt = qt.copy()
-    qt["w"] = (
-        bm25.idf(n_docs, qt["df"].to_numpy())
-        * (bm25.K1 + 1.0)
-        * qt["qtf"].to_numpy()
-    )
+    qt["w"] = bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
     joined = _matched_blocks(spark, store, qt)
     cand = _score_exhaustive(joined, 0.0)  # per-term avgdl column
     agg = cand.groupBy("qid", "doc_int").agg(F.sum("score").alias("score"))
@@ -1840,6 +1817,90 @@ def _decode_positional_terms(pdf: pd.DataFrame) -> dict[str, tuple]:
     return by_term
 
 
+_POS_COLS = ["qid", "seg", "term", "w", "n_docs", "doc_first", "doc_bytes",
+             "tf_bytes", "dl_bytes", "pos_bytes"]
+
+
+def _empty_scores() -> pd.DataFrame:
+    return pd.DataFrame(
+        {"qid": pd.Series([], dtype="int64"),
+         "doc_int": pd.Series([], dtype="int64"),
+         "score": pd.Series([], dtype="float64")}
+    )
+
+
+def _positional_scores(
+    joined: DataFrame,
+    avgdl: float,
+    need: dict,
+    scored: dict,
+    pad: dict,
+    verify,
+) -> DataFrame:
+    """The one grouped-map pass behind the span/phrase kernels: (qid,
+    doc_int, score) rows from ONE ``applyInPandas`` per (qid, seg).
+    Segments are disjoint doc ranges, so per-segment results merge
+    exactly; dead docs are NOT dropped here.
+
+    Per group: decode the position payloads; keep the docs holding every
+    term of ``need[qid]``; size the int64 (candidate, position) key
+    stride as ``maxpos + pad[qid]`` and chunk the candidates so no key
+    overflows; ``verify(qid, by_term, sub, stride)`` returns the
+    surviving doc ids of each chunk; a survivor scores the summed BM25 of
+    ``scored[qid]``'s distinct terms in ascending term order. A per-term
+    ``avgdl`` column in ``joined`` (cross-field clauses) overrides the
+    scalar ``avgdl``."""
+    per_term_avgdl = "avgdl" in joined.columns
+
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        qid = int(key[0])
+        by_term = _decode_positional_terms(pdf)
+        terms = sorted(set(need[qid]))
+        if any(t not in by_term for t in terms):
+            return _empty_scores()
+        cand = by_term[terms[0]][0]
+        for t in terms[1:]:
+            cand = np.intersect1d(cand, by_term[t][0])
+        if cand.size == 0:
+            return _empty_scores()
+        maxpos = 1
+        for _ids, _tfs, _dls, flat, _starts in by_term.values():
+            if flat.size:
+                maxpos = max(maxpos, int(flat.max()) + 2)
+        stride = maxpos + pad[qid]
+        chunk = max(1, (2**62) // stride)  # int64-overflow guard
+        surv = np.concatenate([
+            verify(qid, by_term, cand[c0: c0 + chunk], stride)
+            for c0 in range(0, cand.size, chunk)
+        ])
+        if surv.size == 0:
+            return _empty_scores()
+        meta = pdf.drop_duplicates("term")
+        w_of = dict(zip(meta["term"], meta["w"]))
+        ad_of = (
+            dict(zip(meta["term"], meta["avgdl"])) if per_term_avgdl else {}
+        )
+        scores = np.zeros(surv.size, dtype=np.float64)
+        for tok in sorted(set(scored[qid])):
+            ids, tfs, dls, _f, _s = by_term[tok]
+            i = np.searchsorted(ids, surv)
+            scores += float(w_of[tok]) * bm25.tf_norm(
+                tfs[i], dls[i], float(ad_of.get(tok, avgdl))
+            )
+        return pd.DataFrame(
+            {"qid": pd.Series(np.full(surv.size, qid), dtype="int64"),
+             "doc_int": pd.Series(surv, dtype="int64"),
+             "score": pd.Series(scores, dtype="float64")}
+        )
+
+    cols = _POS_COLS + (["avgdl"] if per_term_avgdl else [])
+    return (
+        joined.select(*cols)
+        .groupBy("qid", "seg")
+        .applyInPandas(run, schema=_SCORES_SCHEMA)
+    )
+
+
 def _adjusted_pos_keys(
     entry: tuple,
     sub: np.ndarray,
@@ -2114,63 +2175,19 @@ def search_span_field_masking(
     if qt.empty:
         return spark.createDataFrame([], RESULT_SCHEMA)
     qt = qt.copy()
-    qt["w"] = bm25.idf(n_docs, qt["df"].to_numpy()) * (bm25.K1 + 1.0)
+    qt["w"] = bm25.query_weight(n_docs, qt["df"])
 
     joined = _matched_blocks(spark, store, qt)
 
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = int(key[0])
-        pair = terms_by_qid[qid]
-        empty = pd.DataFrame(
-            {"qid": pd.Series([], dtype="int64"),
-             "doc_int": pd.Series([], dtype="int64"),
-             "score": pd.Series([], dtype="float64")}
-        )
-        by_term = _decode_positional_terms(pdf)
-        if any(t not in by_term for t in pair):
-            return empty
-        cand = np.intersect1d(by_term[pair[0]][0], by_term[pair[1]][0])
-        if cand.size == 0:
-            return empty
-        maxpos = 1
-        for _ids, _tfs, _dls, flat, _starts in by_term.values():
-            if flat.size:
-                maxpos = max(maxpos, int(flat.max()) + 2)
-        stride = maxpos + 2
-        chunk = max(1, (2**62) // stride)
-        surv_l = []
-        for c0 in range(0, cand.size, chunk):
-            got = _span_unordered_survivors(
-                by_term, pair, cand[c0: c0 + chunk], stride, slop
-            )
-            if got.size:
-                surv_l.append(got)
-        if not surv_l:
-            return empty
-        surv = np.concatenate(surv_l)
-        meta = (
-            pdf[["term", "w", "avgdl"]]
-            .drop_duplicates()
-            .set_index("term")
-        )
-        scores = np.zeros(surv.size, dtype=np.float64)
-        for tok, (ids, tfs, dls, _f, _s) in by_term.items():
-            i = np.searchsorted(ids, surv)
-            scores += float(meta.loc[tok, "w"]) * bm25.tf_norm(
-                tfs[i], dls[i], float(meta.loc[tok, "avgdl"])
-            )
-        return pd.DataFrame(
-            {"qid": pd.Series(np.full(surv.size, qid), dtype="int64"),
-             "doc_int": pd.Series(surv, dtype="int64"),
-             "score": pd.Series(scores, dtype="float64")}
+    def verify(qid, by_term, sub, stride):
+        return _span_unordered_survivors(
+            by_term, terms_by_qid[qid], sub, stride, slop
         )
 
-    cols = ["qid", "seg", "term", "w", "avgdl", "n_docs", "doc_first",
-            "doc_bytes", "tf_bytes", "dl_bytes", "pos_bytes"]
-    scored = (
-        joined.select(*cols)
-        .groupBy("qid", "seg")
-        .applyInPandas(run, schema="qid long, doc_int long, score double")
+    # the per-term avgdl column rules the length norm
+    scored = _positional_scores(
+        joined, 0.0, terms_by_qid, terms_by_qid,
+        dict.fromkeys(terms_by_qid, 2), verify,
     )
     agg = scored.groupBy("qid", "doc_int").agg(F.sum("score").alias("score"))
     agg = _drop_dead(spark, store, agg)
@@ -2296,77 +2313,26 @@ def search_span_not(
     if qt.empty:
         return spark.createDataFrame([], RESULT_SCHEMA)
     qt = qt.copy()
-    qt["w"] = (
-        bm25.idf(n_docs, qt["df"].to_numpy())
-        * (bm25.K1 + 1.0)
-        * qt["qtf"].to_numpy()
-    )
-    n_inc_terms = (
-        qt[qt["_inc"]].groupby("qid").size().to_dict()
-    )
+    qt["w"] = bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
     joined = _matched_blocks(spark, store, qt.drop(columns=["_inc"]))
 
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = int(key[0])
-        inc = inc_by_qid[qid]
-        exc = exc_by_qid[qid]
-        empty = pd.DataFrame(
-            {"qid": pd.Series([], dtype="int64"),
-             "doc_int": pd.Series([], dtype="int64"),
-             "score": pd.Series([], dtype="float64")}
+    def verify(qid, by_term, sub, stride):
+        inc, exc = inc_by_qid[qid], exc_by_qid[qid]
+        starts = _span_chain_starts(by_term, inc, sub, stride)
+        if starts is None or starts.size == 0:
+            return sub[:0]
+        estarts = _span_chain_starts(by_term, exc, sub, stride)
+        starts = _span_not_filter(
+            starts, estarts, stride, len(inc), len(exc), pre, post
         )
-        by_term = _decode_positional_terms(pdf)
-        if sum(1 for t in set(inc) if t in by_term) < n_inc_terms[qid]:
-            return empty
-        cand = None
-        for tok in set(inc):
-            ids = by_term[tok][0]
-            cand = ids if cand is None else np.intersect1d(cand, ids)
-        if cand is None or cand.size == 0:
-            return empty
-        maxpos = 1
-        for _ids, _tfs, _dls, flat, _starts in by_term.values():
-            if flat.size:
-                maxpos = max(maxpos, int(flat.max()) + 2)
-        stride = maxpos + len(inc) + len(exc) + pre + post + 2
-        chunk = max(1, (2**62) // stride)
-        surv_l = []
-        for c0 in range(0, cand.size, chunk):
-            sub = cand[c0: c0 + chunk]
-            starts = _span_chain_starts(by_term, inc, sub, stride)
-            if starts is None or starts.size == 0:
-                continue
-            estarts = _span_chain_starts(by_term, exc, sub, stride)
-            starts = _span_not_filter(
-                starts, estarts, stride, len(inc), len(exc), pre, post
-            )
-            if starts.size:
-                surv_l.append(sub[np.unique(starts // stride)])
-        if not surv_l:
-            return empty
-        surv = np.concatenate(surv_l)
-        w_by_term = (
-            pdf[["term", "w"]].drop_duplicates().set_index("term")["w"]
-        )
-        scores = np.zeros(surv.size, dtype=np.float64)
-        for tok in sorted(set(inc)):
-            ids, tfs, dls, _f, _s = by_term[tok]
-            i = np.searchsorted(ids, surv)
-            scores += float(w_by_term[tok]) * bm25.tf_norm(
-                tfs[i], dls[i], avgdl
-            )
-        return pd.DataFrame(
-            {"qid": pd.Series(np.full(surv.size, qid), dtype="int64"),
-             "doc_int": pd.Series(surv, dtype="int64"),
-             "score": pd.Series(scores, dtype="float64")}
-        )
+        return sub[np.unique(starts // stride)]
 
-    cols = ["qid", "seg", "term", "w", "n_docs", "doc_first", "doc_bytes",
-            "tf_bytes", "dl_bytes", "pos_bytes"]
-    scored = (
-        joined.select(*cols)
-        .groupBy("qid", "seg")
-        .applyInPandas(run, schema="qid long, doc_int long, score double")
+    pad = {
+        q: len(inc) + len(exc_by_qid[q]) + pre + post + 2
+        for q, inc in inc_by_qid.items()
+    }
+    scored = _positional_scores(
+        joined, avgdl, inc_by_qid, inc_by_qid, pad, verify
     )
     scored = _drop_dead(spark, store, scored)
     return _present(spark, store, _cut_topk(scored, k), k)
@@ -2484,76 +2450,24 @@ def search_span_containing(
     if qt.empty:
         return spark.createDataFrame([], RESULT_SCHEMA)
     qt = qt.copy()
-    qt["w"] = (
-        bm25.idf(n_docs, qt["df"].to_numpy())
-        * (bm25.K1 + 1.0)
-        * qt["qtf"].to_numpy()
-    )
+    qt["w"] = bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
     joined = _matched_blocks(spark, store, qt)
 
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = int(key[0])
-        keep = keep_by_qid[qid]
-        other = other_by_qid[qid]
-        empty = pd.DataFrame(
-            {"qid": pd.Series([], dtype="int64"),
-             "doc_int": pd.Series([], dtype="int64"),
-             "score": pd.Series([], dtype="float64")}
+    def verify(qid, by_term, sub, stride):
+        keep, other = keep_by_qid[qid], other_by_qid[qid]
+        starts = _span_chain_starts(by_term, keep, sub, stride)
+        if starts is None or starts.size == 0:
+            return sub[:0]
+        ostarts = _span_chain_starts(by_term, other, sub, stride)
+        starts = _span_contain_filter(
+            starts, ostarts, stride, len(keep), len(other), keep_is_big
         )
-        by_term = _decode_positional_terms(pdf)
-        all_terms = set(keep) | set(other)
-        if any(t not in by_term for t in all_terms):
-            return empty
-        cand = None
-        for tok in all_terms:
-            ids = by_term[tok][0]
-            cand = ids if cand is None else np.intersect1d(cand, ids)
-        if cand is None or cand.size == 0:
-            return empty
-        maxpos = 1
-        for _ids, _tfs, _dls, flat, _starts in by_term.values():
-            if flat.size:
-                maxpos = max(maxpos, int(flat.max()) + 2)
-        stride = maxpos + len(keep) + len(other) + 2
-        chunk = max(1, (2**62) // stride)
-        surv_l = []
-        for c0 in range(0, cand.size, chunk):
-            sub = cand[c0: c0 + chunk]
-            starts = _span_chain_starts(by_term, keep, sub, stride)
-            if starts is None or starts.size == 0:
-                continue
-            ostarts = _span_chain_starts(by_term, other, sub, stride)
-            starts = _span_contain_filter(
-                starts, ostarts, stride, len(keep), len(other),
-                keep_is_big,
-            )
-            if starts.size:
-                surv_l.append(sub[np.unique(starts // stride)])
-        if not surv_l:
-            return empty
-        surv = np.concatenate(surv_l)
-        w_by_term = (
-            pdf[["term", "w"]].drop_duplicates().set_index("term")["w"]
-        )
-        scores = np.zeros(surv.size, dtype=np.float64)
-        for tok in sorted(set(keep)):
-            ids, tfs, dls, _f, _s = by_term[tok]
-            i = np.searchsorted(ids, surv)
-            scores += float(w_by_term[tok]) * bm25.tf_norm(
-                tfs[i], dls[i], avgdl
-            )
-        return pd.DataFrame(
-            {"qid": pd.Series(np.full(surv.size, qid), dtype="int64"),
-             "doc_int": pd.Series(surv, dtype="int64"),
-             "score": pd.Series(scores, dtype="float64")}
-        )
+        return sub[np.unique(starts // stride)]
 
-    cols = ["qid", "seg", "term", "w", "n_docs", "doc_first", "doc_bytes",
-            "tf_bytes", "dl_bytes", "pos_bytes"]
-    scored = (
-        joined.select(*cols)
-        .groupBy("qid", "seg")
-        .applyInPandas(run, schema="qid long, doc_int long, score double")
+    need = {q: keep + other_by_qid[q] for q, keep in keep_by_qid.items()}
+    pad = {q: len(terms) + 2 for q, terms in need.items()}
+    scored = _positional_scores(
+        joined, avgdl, need, keep_by_qid, pad, verify
     )
     scored = _drop_dead(spark, store, scored)
     return _present(spark, store, _cut_topk(scored, k), k)
@@ -2613,7 +2527,12 @@ def _phrase_scores(
     check through the unordered-window kernel) and the query_string
     phrase clauses (which pack phrases into composite qids). Returns None
     when no query has indexable terms. Dead docs are NOT dropped here
-    (callers aggregate first)."""
+    (callers aggregate first).
+
+    Only the phrase check is local: the exact chain (slop 0) or the
+    in-order / unordered span verifier is the ``verify`` step of
+    :func:`_positional_scores`, which owns decode, candidate
+    intersection, key stride, chunking and the summed-BM25 scoring."""
     if not store.meta.get("positions"):
         raise EngineError(
             "phrase search needs a store built with positions=True"
@@ -2643,93 +2562,34 @@ def _phrase_scores(
     qt = qt[~qt["qid"].isin(dead_qids)]
     if qt.empty:
         return None
-    qt["w"] = (
-        bm25.idf(n_docs, qt["df"].to_numpy())
-        * (bm25.K1 + 1.0)
-        * qt["qtf"].to_numpy()
-    )
-    n_terms_by_qid = qt.groupby("qid").size().to_dict()
-
+    qt["w"] = bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
     joined = _matched_blocks(spark, store, qt)
 
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = int(key[0])
+    def verify(qid, by_term, sub, stride):
         phrase = phrase_by_qid[qid]
-        empty = pd.DataFrame(
-            {"qid": pd.Series([], dtype="int64"),
-             "doc_int": pd.Series([], dtype="int64"),
-             "score": pd.Series([], dtype="float64")}
-        )
-        by_term = _decode_positional_terms(pdf)
-
-        # AND over distinct terms: a doc must contain them all
-        if len(by_term) < n_terms_by_qid[qid]:
-            return empty
-        cand = None
-        for ids, *_ in by_term.values():
-            cand = ids if cand is None else np.intersect1d(cand, ids)
-        if cand.size == 0:
-            return empty
-
-        # vectorized position-chain verification: encode each candidate's
-        # adjusted positions as (cand_index * stride + pos - offset) keys and
-        # intersect the key sets across phrase tokens — one searchsorted +
-        # gather per token over ALL candidates, no per-doc loop
-        maxpos = 1
-        for _ids, _tfs, _dls, flat, _starts in by_term.values():
-            if flat.size:
-                maxpos = max(maxpos, int(flat.max()) + 2)
-        stride = maxpos + len(phrase)
-        chunk = max(1, (2**62) // stride)  # int64-overflow guard
-        surv_l = []
-        for c0 in range(0, cand.size, chunk):
-            sub = cand[c0: c0 + chunk]
-            if slop > 0 or not ordered:
-                kernel_fn = (
-                    _span_near_survivors if ordered
-                    else _span_unordered_survivors
-                )
-                got = kernel_fn(by_term, phrase, sub, stride, slop)
-                if got.size:
-                    surv_l.append(got)
-                continue
-            valid = None
-            for off, tok in enumerate(phrase):
-                key = _adjusted_pos_keys(by_term[tok], sub, off, stride)
-                valid = (
-                    key
-                    if valid is None
-                    else np.intersect1d(valid, key, assume_unique=True)
-                )
-                if valid.size == 0:
-                    break
-            if valid is not None and valid.size:
-                surv_l.append(sub[np.unique(valid // stride)])
-        if not surv_l:
-            return empty
-        surv = np.concatenate(surv_l)
-
-        w_by_term = (
-            pdf[["term", "w"]].drop_duplicates().set_index("term")["w"]
-        )
-        scores = np.zeros(surv.size, dtype=np.float64)
-        for tok, (ids, tfs, dls, _f, _s) in by_term.items():
-            i = np.searchsorted(ids, surv)
-            scores += float(w_by_term[tok]) * bm25.tf_norm(
-                tfs[i], dls[i], avgdl
+        if slop > 0 or not ordered:
+            kernel_fn = (
+                _span_near_survivors if ordered
+                else _span_unordered_survivors
             )
-        return pd.DataFrame(
-            {"qid": pd.Series(np.full(surv.size, qid), dtype="int64"),
-             "doc_int": pd.Series(surv, dtype="int64"),
-             "score": pd.Series(scores, dtype="float64")}
-        )
+            return kernel_fn(by_term, phrase, sub, stride, slop)
+        # exact phrase: intersect the (candidate, position - offset) key
+        # sets across the phrase tokens
+        valid = None
+        for off, tok in enumerate(phrase):
+            key = _adjusted_pos_keys(by_term[tok], sub, off, stride)
+            valid = (
+                key
+                if valid is None
+                else np.intersect1d(valid, key, assume_unique=True)
+            )
+            if valid.size == 0:
+                break
+        return sub[np.unique(valid // stride)]
 
-    cols = ["qid", "seg", "term", "w", "n_docs", "doc_first", "doc_bytes",
-            "tf_bytes", "dl_bytes", "pos_bytes"]
-    return (
-        joined.select(*cols)
-        .groupBy("qid", "seg")
-        .applyInPandas(run, schema="qid long, doc_int long, score double")
+    pad = {q: len(phrase) for q, phrase in phrase_by_qid.items()}
+    return _positional_scores(
+        joined, avgdl, phrase_by_qid, phrase_by_qid, pad, verify
     )
 
 
@@ -2756,11 +2616,7 @@ def _scored_or_match(
     if qt.empty:
         return None
     qt = qt.copy()
-    qt["w"] = (
-        bm25.idf(n_docs, qt["df"].to_numpy())
-        * (bm25.K1 + 1.0)
-        * qt["qtf"].to_numpy()
-    )
+    qt["w"] = bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
     joined = _matched_blocks(spark, store, qt)
     cand = _score_exhaustive(joined, avgdl)
     agg = cand.groupBy("qid", "doc_int").agg(F.sum("score").alias("score"))
@@ -3101,13 +2957,10 @@ def search_sharded(
         qt_live = qt_live[qt_live["df"].notna()]  # shard holds the term
         if qt_live.empty:
             continue
-        qt_live["w"] = (
-            bm25.idf(
-                n_docs,
-                np.array([df_global[t] for t in qt_live["term"]]),
-            )
-            * (bm25.K1 + 1.0)
-            * qt_live["qtf"].to_numpy()
+        qt_live["w"] = bm25.query_weight(
+            n_docs,
+            np.array([df_global[t] for t in qt_live["term"]]),
+            qt_live["qtf"].to_numpy(),
         )
         joined = _matched_blocks(spark, st, qt_live)
         cand = _score_exhaustive(joined, avgdl)
@@ -6676,11 +6529,7 @@ def search_boosting(
     if qt.empty:
         return spark.createDataFrame([], RESULT_SCHEMA)
     qt = qt.copy()
-    qt["w"] = (
-        bm25.idf(n_docs, qt["df"].to_numpy())
-        * (bm25.K1 + 1.0)
-        * qt["qtf"].to_numpy()
-    )
+    qt["w"] = bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
     joined = _matched_blocks(spark, store, qt)
     cand = _score_exhaustive(joined, avgdl)
     half = F.col("qid").bitwiseAND(F.lit(1))
@@ -6810,11 +6659,7 @@ def search_query_string(
         tq = tq.dropna(subset=["df"])
         if not tq.empty:
             tq = tq.copy()
-            tq["w"] = (
-                bm25.idf(n_docs, tq["df"].to_numpy())
-                * (bm25.K1 + 1.0)
-                * tq["qtf"].to_numpy()
-            )
+            tq["w"] = bm25.query_weight(n_docs, tq["df"], tq["qtf"].to_numpy())
             joined = _matched_blocks(spark, store, tq)
             cand = _score_exhaustive(joined, avgdl)
             clause = F.col("qid").bitwiseAND(F.lit(3))
@@ -6961,7 +6806,7 @@ def search_span_first(
     if qt.empty:
         return spark.createDataFrame([], RESULT_SCHEMA)
     qt = qt.copy()
-    qt["w"] = bm25.idf(n_docs, qt["df"].to_numpy()) * (bm25.K1 + 1.0)
+    qt["w"] = bm25.query_weight(n_docs, qt["df"])
     w_by = {
         (int(q), t): float(v)
         for q, t, v in zip(qt["qid"], qt["term"], qt["w"])
@@ -6991,19 +6836,13 @@ def search_span_first(
                 )
             )
         if not outs:
-            return pd.DataFrame(
-                {"qid": pd.Series([], dtype="int64"),
-                 "doc_int": pd.Series([], dtype="int64"),
-                 "score": pd.Series([], dtype="float64")}
-            )
+            return _empty_scores()
         return pd.concat(outs, ignore_index=True)
 
-    cols = ["qid", "seg", "term", "w", "n_docs", "doc_first", "doc_bytes",
-            "tf_bytes", "dl_bytes", "pos_bytes"]
     scored = (
-        joined.select(*cols)
+        joined.select(*_POS_COLS)
         .groupBy("qid", "seg")
-        .applyInPandas(run, schema="qid long, doc_int long, score double")
+        .applyInPandas(run, schema=_SCORES_SCHEMA)
     )
     # multiple query terms per qid OR-sum (parity with search_terms)
     agg = scored.groupBy("qid", "doc_int").agg(
@@ -7177,7 +7016,7 @@ def search_terms(
         return spark.createDataFrame([], RESULT_SCHEMA)
     n_docs = float(store.meta["n_docs"])
     qt = qt.copy()
-    qt["w"] = bm25.idf(n_docs, qt["df"].to_numpy()) * (bm25.K1 + 1.0)
+    qt["w"] = bm25.query_weight(n_docs, qt["df"])
     joined = _matched_blocks(spark, store, qt)
     cand = _score_exhaustive(joined, avgdl)
     agg = cand.groupBy("qid", "doc_int").agg(F.sum("score").alias("score"))
@@ -7383,11 +7222,7 @@ def search_function_score(
     if qt.empty:
         return spark.createDataFrame([], RESULT_SCHEMA)
     qt = qt.copy()
-    qt["w"] = (
-        bm25.idf(n_docs, qt["df"].to_numpy())
-        * (bm25.K1 + 1.0)
-        * qt["qtf"].to_numpy()
-    )
+    qt["w"] = bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
     joined = _matched_blocks(spark, store, qt)
     cand = _score_exhaustive(joined, avgdl)
     agg = cand.groupBy("qid", "doc_int").agg(F.sum("score").alias("score"))
@@ -7560,11 +7395,7 @@ def search_dis_max(
     if qt.empty:
         return spark.createDataFrame([], RESULT_SCHEMA)
     qt = qt.copy()
-    qt["w"] = (
-        bm25.idf(n_docs, qt["df"].to_numpy())
-        * (bm25.K1 + 1.0)
-        * qt["qtf"].to_numpy()
-    )
+    qt["w"] = bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
     joined = _matched_blocks(spark, store, qt)
     cand = _score_exhaustive(joined, avgdl)
     per_clause = cand.groupBy("qid", "doc_int").agg(
@@ -7664,17 +7495,18 @@ def search_phrase_prefix(
         return spark.createDataFrame([], RESULT_SCHEMA)
 
     fx = fx.assign(
-        w_f=bm25.idf(n_docs, fx["df"].to_numpy(dtype="float64"))
-        * (bm25.K1 + 1.0)
-        * fx["qtf"].to_numpy(dtype="float64")
+        w_f=bm25.query_weight(
+            n_docs,
+            fx["df"].to_numpy(dtype="float64"),
+            fx["qtf"].to_numpy(dtype="float64"),
+        )
         if len(fx)
         else pd.Series([], dtype="float64"),
         w_e=0.0,
     )
     exp = exp.assign(
         w_f=0.0,
-        w_e=bm25.idf(n_docs, exp["df"].to_numpy(dtype="float64"))
-        * (bm25.K1 + 1.0),
+        w_e=bm25.query_weight(n_docs, exp["df"].to_numpy(dtype="float64")),
     )
     has_bucket = "bucket" in exp.columns and (
         fx.empty or "bucket" in fx.columns
@@ -7703,11 +7535,7 @@ def search_phrase_prefix(
     def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         qid = int(key[0])
         fixed = fixed_by_qid[qid]
-        empty = pd.DataFrame(
-            {"qid": pd.Series([], dtype="int64"),
-             "doc_int": pd.Series([], dtype="int64"),
-             "score": pd.Series([], dtype="float64")}
-        )
+        empty = _empty_scores()
         by_term = _decode_positional_terms(pdf)
         if any(t not in by_term for t in fixed):
             return empty
@@ -7787,12 +7615,10 @@ def search_phrase_prefix(
              "score": pd.Series(np.concatenate(score_l), dtype="float64")}
         )
 
-    cols2 = ["qid", "seg", "term", "w", "n_docs", "doc_first", "doc_bytes",
-             "tf_bytes", "dl_bytes", "pos_bytes"]
     scored = (
-        joined.select(*cols2)
+        joined.select(*_POS_COLS)
         .groupBy("qid", "seg")
-        .applyInPandas(run, schema="qid long, doc_int long, score double")
+        .applyInPandas(run, schema=_SCORES_SCHEMA)
     )
     scored = _drop_dead(spark, store, scored)
     return _present(spark, store, _cut_topk(scored, k), k)
@@ -7823,31 +7649,26 @@ def _score_exhaustive(joined: DataFrame, avgdl: float) -> DataFrame:
 
     When ``joined`` carries a per-term ``avgdl`` column (multi-field
     queries: each term's field has its own average length) it overrides the
-    scalar — the length norm is field-local, matching per-field ES stats."""
+    scalar — the length norm is field-local, matching per-field ES stats.
+    Either way the score is ``w * bm25.tf_norm`` (which takes a scalar or
+    per-posting ``avgdl``)."""
     per_term_avgdl = "avgdl" in joined.columns
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # batch-level decode: codec.decode_blocks over the whole Arrow
-        # batch. Per-posting arithmetic is the identical
-        # elementwise expression (tf_norm's own formula — scalar vs
-        # per-element avgdl of the same value is the same IEEE division),
-        # in the identical row order.
+        # batch, then one tf_norm over every posting in block row order
         for pdf in batches:
             if not len(pdf):
                 continue
             counts = pdf["n_docs"].to_numpy(np.int64)
             ids, tfs, dls = codec.decode_blocks(pdf)
             w = np.repeat(pdf["w"].to_numpy(np.float64), counts)
-            if per_term_avgdl:
-                ad = np.repeat(pdf["avgdl"].to_numpy(np.float64), counts)
-                tf64 = tfs.astype(np.float64)
-                norm = tf64 / (
-                    tf64
-                    + bm25.K1
-                    * (1.0 - bm25.B + bm25.B * dls.astype(np.float64) / ad)
-                )
-            else:
-                norm = bm25.tf_norm(tfs, dls, avgdl)
+            ad = (
+                np.repeat(pdf["avgdl"].to_numpy(np.float64), counts)
+                if per_term_avgdl
+                else avgdl
+            )
+            norm = bm25.tf_norm(tfs, dls, ad)
             yield pd.DataFrame(
                 {"qid": np.repeat(pdf["qid"].to_numpy(np.int64), counts),
                  "doc_int": ids,
@@ -7856,14 +7677,11 @@ def _score_exhaustive(joined: DataFrame, avgdl: float) -> DataFrame:
 
     cols = ["qid", "w", "n_docs", "doc_first", "doc_bytes", "tf_bytes",
             "dl_bytes"] + (["avgdl"] if per_term_avgdl else [])
-    return joined.select(*cols).mapInPandas(
-        run, schema="qid long, doc_int long, score double"
-    )
+    return joined.select(*cols).mapInPandas(run, schema=_SCORES_SCHEMA)
 
 
 _WAND_COLS = ["qid", "seg", "term", "w", "n_docs", "doc_first", "doc_last",
               "max_tf", "min_dl", "doc_bytes", "tf_bytes", "dl_bytes"]
-_WAND_SCHEMA = "qid long, doc_int long, score double"
 
 
 def _score_wand(
@@ -7923,13 +7741,7 @@ def _score_wand(
       boundary rows are all kept for the downstream doc_id tie-break.
     """
 
-    empty = pd.DataFrame(
-        {
-            "qid": pd.Series([], dtype="int64"),
-            "doc_int": pd.Series([], dtype="int64"),
-            "score": pd.Series([], dtype="float64"),
-        }
-    )
+    empty = _empty_scores()
 
     def score_group(
         qid: int,
@@ -8144,7 +7956,7 @@ def _score_wand(
         return (
             joined.select(*_WAND_COLS)
             .groupBy("qid", "seg")
-            .applyInPandas(run, schema=_WAND_SCHEMA)
+            .applyInPandas(run, schema=_SCORES_SCHEMA)
         )
 
     def run_cons(
@@ -8168,7 +7980,7 @@ def _score_wand(
         joined.select(*_WAND_COLS)
         .groupBy("qid", "seg")
         .cogroup(constraints.groupBy("qid", "seg"))
-        .applyInPandas(run_cons, schema=_WAND_SCHEMA)
+        .applyInPandas(run_cons, schema=_SCORES_SCHEMA)
     )
 
 
@@ -8790,11 +8602,7 @@ def search_terms_set(
             [], "qid long, rank int, doc_id string, nt long, score_r double"
         )
     qt = qt.copy()
-    qt["w"] = (
-        bm25.idf(n_docs, qt["df"].to_numpy())
-        * (bm25.K1 + 1.0)
-        * qt["qtf"].to_numpy()
-    )
+    qt["w"] = bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
     joined = _matched_blocks(spark, store, qt)
     cand = _score_exhaustive(joined, avgdl)
     agg = cand.groupBy("qid", "doc_int").agg(
@@ -9556,11 +9364,7 @@ def search_matched_queries(
             [], RESULT_SCHEMA + ", matched string"
         )
     n_docs = float(store.meta["n_docs"])
-    qt["w"] = (
-        bm25.idf(n_docs, qt["df"].to_numpy())
-        * (bm25.K1 + 1.0)
-        * qt["qtf"].to_numpy()
-    )
+    qt["w"] = bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
     joined = _matched_blocks(spark, store, qt)
     cand = _score_exhaustive(joined, avgdl)
     name_rows = [
@@ -10213,7 +10017,7 @@ def search_sparse_vector(
 
     cand = joined.select(
         "qid", "w", "n_docs", "doc_first", "doc_bytes", "tf_bytes"
-    ).mapInPandas(run, schema="qid long, doc_int long, score double")
+    ).mapInPandas(run, schema=_SCORES_SCHEMA)
     agg = cand.groupBy("qid", "doc_int").agg(
         F.sum("score").alias("score"), F.count("*").alias("nt")
     )
@@ -11184,9 +10988,7 @@ def search_lucene_query_string(
         qt = qt.dropna(subset=["df"])
         if not qt.empty:
             qt = qt.copy()
-            qt["w"] = (
-                bm25.idf(n_docs, qt["df"].to_numpy()) * (bm25.K1 + 1.0)
-            )
+            qt["w"] = bm25.query_weight(n_docs, qt["df"])
             joined = _matched_blocks(spark, store, qt)
             # per-atom avgdl column rules the length norm
             cands.append(_score_exhaustive(joined, 0.0))

@@ -71,6 +71,15 @@ def test_wand_and_mode_absent_term_matches_nothing(spark, store):
     assert res.count() == 0
 
 
+@pytest.mark.parametrize("algo", ["exhaustive", "wand"])
+@pytest.mark.parametrize("mode", ["AND", "xor", ""])
+def test_unknown_mode_raises_on_every_algo(spark, store, qsets, algo, mode):
+    # an unrecognised mode must not silently run as OR
+    full, _ = qsets
+    with pytest.raises(ValueError, match="unknown mode"):
+        search.search(spark, store, full, k=5, mode=mode, algo=algo)
+
+
 def test_wand_search_after_pages_tile(spark, store, qsets):
     """Paginate the whole ranking with the WAND cursor: the concatenation
     of pages must equal the one-shot deep ranking, per qid."""
