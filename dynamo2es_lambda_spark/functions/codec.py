@@ -182,6 +182,39 @@ def encode_blocks(
     return blocks
 
 
+def encode_runs(
+    doc_ids: np.ndarray,
+    tfs: np.ndarray,
+    dls: np.ndarray,
+    sizes: np.ndarray,
+) -> dict[str, np.ndarray | list[bytes]]:
+    """Many blocks at once: flat postings cut into consecutive blocks of
+    ``sizes`` docs (each ≥ 1, doc-ascending within its block) → the block
+    columns n_docs, doc_first, doc_last, max_tf, min_dl, doc_bytes,
+    tf_bytes, dl_bytes, one entry per block. Each column costs one
+    :func:`varbyte_encode_grouped` or one reduceat, however many blocks
+    there are; block i is byte-equal to :func:`encode_blocks` over its
+    slice. The inverse of :func:`decode_blocks`."""
+    d = np.asarray(doc_ids, dtype=np.int64)
+    tf = np.asarray(tfs, dtype=np.int64)
+    dl = np.asarray(dls, dtype=np.int64)
+    sizes = np.asarray(sizes, dtype=np.int64)
+    starts = np.cumsum(sizes) - sizes
+    gaps = np.zeros(d.size, dtype=np.int64)
+    gaps[1:] = d[1:] - d[:-1]
+    gaps[starts] = 0  # first doc stored absolutely in doc_first
+    return {
+        "n_docs": sizes.astype(np.int32),
+        "doc_first": d[starts],
+        "doc_last": d[starts + sizes - 1],
+        "max_tf": np.maximum.reduceat(tf, starts).astype(np.int32),
+        "min_dl": np.minimum.reduceat(dl, starts).astype(np.int32),
+        "doc_bytes": varbyte_encode_grouped(gaps, sizes),
+        "tf_bytes": varbyte_encode_grouped(tf - 1, sizes),
+        "dl_bytes": varbyte_encode_grouped(dl - 1, sizes),
+    }
+
+
 def decode_block(
     doc_first: int, doc_bytes: bytes, tf_bytes: bytes, dl_bytes: bytes
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:

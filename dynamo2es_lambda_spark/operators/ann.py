@@ -1026,7 +1026,7 @@ def semantic_dedup(
     # scale).
     tau_f = float(tau)
 
-    def pair_fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pair_fn(key, pdf):
         m = len(pdf)
         empty = pd.DataFrame(
             {

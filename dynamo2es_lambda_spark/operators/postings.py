@@ -41,18 +41,13 @@ from pyspark.sql import functions as F
 
 from ..functions import analysis, codec
 
-TOKENS_SCHEMA = "doc_int long, term string, tf long, dl long"
 BLOCKS_SCHEMA = (
     "term string, seg long, block_id int, n_docs int, doc_first long, "
     "doc_last long, max_tf int, min_dl int, doc_bytes binary, "
     "tf_bytes binary, dl_bytes binary, pos_bytes binary"
 )
-
-
-_BLOCK_COLS = [
-    "term", "seg", "block_id", "n_docs", "doc_first", "doc_last",
-    "max_tf", "min_dl", "doc_bytes", "tf_bytes", "dl_bytes", "pos_bytes",
-]
+# (name, type) of each block column, in file order
+BLOCK_FIELDS = [tuple(c.split()) for c in BLOCKS_SCHEMA.split(", ")]
 
 
 DEFAULT_SEGMENT_DOCS = 4096
@@ -102,49 +97,27 @@ def encode_term_blocks(
     def encode_head(head: pd.DataFrame) -> pd.DataFrame:
         """Vectorized whole-batch block encoder: group boundaries from the
         sorted (term, seg) run-length structure, 128-doc blocks inside each
-        group, and ALL per-block payloads from three grouped varbyte passes
-        (codec.varbyte_encode_grouped encodes the flat value array once and
-        slices per block — byte-identical to per-block varbyte_encode). The
-        former shape called pandas groupby + codec.encode_blocks once per
-        (term, seg) group — ~50 µs of per-group fixed cost × the number of
-        groups (most hold a handful of postings) dominated the encode
-        stage."""
+        group, and every block payload from one codec.encode_runs call —
+        no per-group Python work, since most (term, seg) groups hold only
+        a handful of postings."""
         import numpy as np
 
         n = len(head)
         term = head["term"].to_numpy(dtype=object)
         seg = head["seg"].to_numpy(dtype=np.int64)
-        bucket = head["term_bucket"].to_numpy(dtype=np.int64)
-        d = head["doc_int"].to_numpy(dtype=np.int64)
-        tf = head["tf"].to_numpy(dtype=np.int64)
-        dl = head["dl"].to_numpy(dtype=np.int64)
         g_change = np.ones(n, dtype=bool)
         g_change[1:] = (term[1:] != term[:-1]) | (seg[1:] != seg[:-1])
         g_ids = np.cumsum(g_change) - 1
         g_starts = np.nonzero(g_change)[0]
         row_in_g = np.arange(n, dtype=np.int64) - g_starts[g_ids]
-        b_change = g_change | (row_in_g % codec.BLOCK_SIZE == 0)
-        b_starts = np.nonzero(b_change)[0]
-        b_sizes = np.diff(np.append(b_starts, n)).astype(np.int64)
-        b_ends = b_starts + b_sizes
-        gaps = np.empty(n, dtype=np.int64)
-        gaps[0] = 0
-        gaps[1:] = d[1:] - d[:-1]
-        gaps[b_starts] = 0  # first doc of a block stored via doc_first
-        doc_bytes = codec.varbyte_encode_grouped(
-            gaps.astype(np.uint64), b_sizes
-        )
-        tf_bytes = codec.varbyte_encode_grouped(
-            (tf - 1).astype(np.uint64), b_sizes
-        )
-        dl_bytes = codec.varbyte_encode_grouped(
-            (dl - 1).astype(np.uint64), b_sizes
-        )
+        b_starts = np.nonzero(g_change | (row_in_g % codec.BLOCK_SIZE == 0))[0]
+        b_sizes = np.diff(np.append(b_starts, n))
         if "pos_bytes" in head.columns:
             pos = head["pos_bytes"].to_numpy(dtype=object)
-            pos_col = [
-                b"".join(pos[lo:hi]) for lo, hi in zip(b_starts, b_ends)
-            ]
+            pos_col = pd.Series(
+                [b"".join(pos[lo:lo + k]) for lo, k in zip(b_starts, b_sizes)],
+                dtype="object",
+            )
         else:
             pos_col = None
         return pd.DataFrame(
@@ -153,20 +126,15 @@ def encode_term_blocks(
                 "seg": seg[b_starts],
                 "block_id": (row_in_g[b_starts]
                              // codec.BLOCK_SIZE).astype(np.int32),
-                "n_docs": b_sizes.astype(np.int32),
-                "doc_first": d[b_starts],
-                "doc_last": d[b_ends - 1],
-                "max_tf": np.maximum.reduceat(tf, b_starts).astype(np.int32),
-                "min_dl": np.minimum.reduceat(dl, b_starts).astype(np.int32),
-                "doc_bytes": pd.Series(doc_bytes, dtype="object"),
-                "tf_bytes": pd.Series(tf_bytes, dtype="object"),
-                "dl_bytes": pd.Series(dl_bytes, dtype="object"),
-                "pos_bytes": (
-                    pd.Series(pos_col, dtype="object")
-                    if pos_col is not None
-                    else None
+                **codec.encode_runs(
+                    head["doc_int"].to_numpy(dtype=np.int64),
+                    head["tf"].to_numpy(dtype=np.int64),
+                    head["dl"].to_numpy(dtype=np.int64),
+                    b_sizes,
                 ),
-                "term_bucket": bucket[b_starts],
+                "pos_bytes": pos_col,
+                "term_bucket": head["term_bucket"].to_numpy(
+                    dtype=np.int64)[b_starts],
             }
         )
 

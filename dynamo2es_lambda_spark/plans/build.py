@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 from dataclasses import dataclass
 
@@ -55,6 +56,208 @@ class BuildResult:
     quarantined: int
     batches: list[str]
     skipped_batches: int = 0  # checkpoint-resumed batches left untouched
+
+
+# a layout flag's meta.json value → its record value (explicit arguments
+# go through the same normalization before the conflict comparison)
+_LAYOUT_FLAGS = {
+    "positions": bool,
+    "lm_stats": bool,
+    "id_mode": str,
+    "fields": lambda v: tuple(v or ()) or None,
+    "edge_ngrams": lambda v: tuple(sorted({int(g) for g in v or ()})) or None,
+    "doc_meta_cols": lambda v: tuple(v or ()),
+    "num_buckets": int,
+}
+# what an explicit conflicting value would break, per flag
+_CONFLICTS = {
+    "positions": "mix batch layouts",
+    "lm_stats": "leave earlier batches' grams uncounted and skew the LM",
+    "id_mode": "mix id namespaces",
+    "fields": "mix qualified and unqualified term namespaces",
+    "edge_ngrams": "change the subfield set mid-store",
+    "doc_meta_cols": "change the marker schema mid-store",
+    "num_buckets": (
+        "write blocks under a second pmod() layout and break term_bucket "
+        "pruning"
+    ),
+}
+_FIELD_NAME = r"[A-Za-z_][A-Za-z0-9_]*(\.[A-Za-z_][A-Za-z0-9_]*)*"
+# column names the segment files already use — a doc_meta_col must not
+# shadow one
+_RESERVED_COLS = frozenset({
+    "part", "term", "seg", "block_id", "n_docs", "doc_first", "doc_last",
+    "max_tf", "min_dl", "doc_bytes", "tf_bytes", "dl_bytes", "pos_bytes",
+    "term_bucket", "doc_int", "dl", "doc_seg", "batch", "doc_id",
+    "index_name", "doc_type", "parent", "version", "content_sha256", "lang",
+    "ts", "field_dls",
+})
+
+
+@dataclass(frozen=True)
+class StoreLayout:
+    """The layout every batch of one store shares: the flags a build,
+    a CDC batch and a finalize must agree on, plus the segment sizing.
+    meta.json stores it; :meth:`read` and :meth:`resolve` are the only
+    readers of its layout keys on the write path, and :meth:`write_meta`
+    the only writer."""
+
+    positions: bool = False
+    id_mode: str = "hash"
+    num_buckets: int = DEFAULT_BUCKETS
+    fields: tuple[str, ...] | None = None
+    edge_ngrams: tuple[int, ...] | None = None
+    doc_meta_cols: tuple[str, ...] = ()
+    lm_stats: bool = False
+    segment_docs: int = 0
+
+    @classmethod
+    def _from_meta(cls, meta: dict) -> StoreLayout:
+        defaults = cls()
+        return cls(
+            **{
+                name: norm(meta.get(name, getattr(defaults, name)))
+                for name, norm in _LAYOUT_FLAGS.items()
+            },
+            segment_docs=int(meta.get("segment_docs", 0)),
+        )
+
+    @classmethod
+    def read(cls, store_path: str) -> StoreLayout:
+        """The store's layout as its meta.json records it (defaults for a
+        store not yet finalized)."""
+        return cls._from_meta(store_io.read_meta(store_path))
+
+    @classmethod
+    def resolve(
+        cls,
+        store_path: str,
+        *,
+        content_col: str,
+        segment_docs: int | None,
+        **flags,
+    ) -> StoreLayout:
+        """The layout a build onto ``store_path`` writes. Each flag in
+        ``flags`` (the keys of ``_LAYOUT_FLAGS``) is inherit-or-conflict:
+        None inherits the finalized store's value (a fresh store's
+        default); an explicit value that differs from a committed store's
+        raises, naming the flag — a resumed build must not mix batch
+        layouts or desync meta.json from the committed batches."""
+        prev = store_io.read_meta(store_path)
+        stored = cls._from_meta(prev)
+        strict = bool(prev) and store_io.has_checkpoints(store_path)
+        out: dict = {}
+        for name, norm in _LAYOUT_FLAGS.items():
+            value = flags.get(name)
+            if value is None:
+                out[name] = getattr(stored, name)
+                continue
+            value = norm(value)
+            if name == "fields":
+                # dotted paths index NESTED object fields ("meta.author");
+                # each dot segment must be a plain identifier so the path
+                # parses identically as a Spark struct accessor, a SQL
+                # expression, and a term-prefix qualifier
+                for f_ in value or ():
+                    if not re.fullmatch(_FIELD_NAME, f_):
+                        raise EngineError(f"invalid field name: {f_!r}")
+                if value and len(set(value)) != len(value):
+                    raise EngineError(f"duplicate field names: {value}")
+            elif name == "edge_ngrams":
+                if out["fields"] is not None and not stored.edge_ngrams:
+                    raise EngineError(
+                        "edge_ngrams is mutually exclusive with fields= — "
+                        "the search_as_you_type subfields are synthesized "
+                        "from the single content column"
+                    )
+                if not value or any(not 2 <= g <= 4 for g in value):
+                    raise EngineError(
+                        "edge_ngrams: shingle sizes must be distinct ints "
+                        "in 2..4"
+                    )
+            elif name == "doc_meta_cols" and set(value) & _RESERVED_COLS:
+                raise EngineError(
+                    f"doc_meta_cols {sorted(set(value) & _RESERVED_COLS)} "
+                    "collide with reserved store columns — rename the "
+                    "corpus columns"
+                )
+            if strict and value != getattr(stored, name):
+                raise EngineError(
+                    f"store at {store_path} was built with {name}="
+                    f"{getattr(stored, name)}; an explicit conflicting value "
+                    f"would {_CONFLICTS[name]} — rebuild or omit the value "
+                    "to inherit"
+                )
+            out[name] = value
+        if out["id_mode"] not in ("hash", "dense"):
+            raise EngineError(f"unknown id_mode: {out['id_mode']}")
+        if out["edge_ngrams"]:
+            # search_as_you_type: the subfields derive from the content
+            # column, so they ARE the store's field set
+            sayt_fields = (
+                content_col,
+                *(f"{content_col}._{g}gram" for g in out["edge_ngrams"]),
+                f"{content_col}._index_prefix",
+            )
+            if out["fields"] is None:
+                out["fields"] = sayt_fields
+            elif out["fields"] != sayt_fields:
+                raise EngineError(
+                    f"store at {store_path}: fields={out['fields']} "
+                    f"conflicts with the edge_ngrams subfield set "
+                    f"{sayt_fields}"
+                )
+        both = sorted(set(out["doc_meta_cols"]) & set(out["fields"] or ()))
+        if both:
+            # the fused tokenize pass consumes field columns (they become
+            # qualified postings, operators/ids.tokenize_count_rows) — a
+            # column cannot ALSO ride the doc markers; silently dropping
+            # it would make doc_stats reads fail later, so refuse here
+            raise EngineError(
+                f"doc_meta_cols {both} are also indexed fields — project "
+                "a duplicate column (e.g. .withColumn('x_meta', col('x')))"
+                " and list that as the meta column"
+            )
+        return cls(
+            **out,
+            segment_docs=segment_docs or postings.DEFAULT_SEGMENT_DOCS,
+        )
+
+    def write_meta(
+        self, store_path: str, stats: dict, segments_schema: dict
+    ) -> None:
+        """meta.json: ``stats`` (n_docs, avgdl and the optional token
+        totals) around this layout, in the fixed key order readers and
+        byte-level store comparisons rely on; aliases registered on the
+        store (plans/manage.put_alias) carry over."""
+        meta = {
+            "n_docs": stats["n_docs"],
+            "avgdl": stats["avgdl"],
+            "segment_docs": self.segment_docs,
+            "num_buckets": self.num_buckets,
+            "positions": self.positions,
+            "id_mode": self.id_mode,
+            "lm_stats": self.lm_stats,
+        }
+        if stats.get("dl_sum") is not None:
+            meta["dl_sum"] = int(stats["dl_sum"])
+        if self.fields:
+            meta["fields"] = list(self.fields)
+            meta["avgdl_fields"] = stats["avgdl_fields"]
+            if stats.get("field_dl_sums") is not None:
+                meta["field_dl_sums"] = [
+                    int(x) for x in stats["field_dl_sums"]
+                ]
+        if self.doc_meta_cols:
+            meta["doc_meta_cols"] = list(self.doc_meta_cols)
+        if self.edge_ngrams:
+            meta["edge_ngrams"] = list(self.edge_ngrams)
+        meta["segments_schema"] = segments_schema
+        aliases = store_io.read_meta(store_path).get("aliases")
+        if aliases:
+            meta["aliases"] = aliases
+        with open(os.path.join(store_path, "meta.json"), "w") as f:
+            json.dump(meta, f)
 
 
 _META_COLS = ("doc_id", "index_name", "doc_type", "parent", "version",
@@ -216,152 +419,20 @@ def build_index(
     """
     spark = corpus.sparkSession
     t0 = time.monotonic()
-    segment_docs = segment_docs or postings.DEFAULT_SEGMENT_DOCS
-    prev = store_io.read_meta(store_path)
     committed = store_io.has_checkpoints(store_path)
-    if positions is None:
-        positions = bool(prev.get("positions", False))
-    elif committed and prev and bool(prev.get("positions", False)) != positions:
-        raise EngineError(
-            f"store at {store_path} was built with positions="
-            f"{prev.get('positions', False)}; an explicit conflicting value "
-            "would mix batch layouts — rebuild or omit the flag to inherit"
-        )
-    if lm_stats is None:
-        lm_stats = bool(prev.get("lm_stats", False))
-    elif committed and prev and bool(prev.get("lm_stats", False)) != lm_stats:
-        raise EngineError(
-            f"store at {store_path} was built with lm_stats="
-            f"{prev.get('lm_stats', False)}; an explicit conflicting value "
-            "would leave earlier batches' grams uncounted and skew the LM — "
-            "rebuild or omit the flag to inherit"
-        )
-    if id_mode is None:
-        id_mode = prev.get("id_mode", "hash")
-    elif committed and prev and prev.get("id_mode", "hash") != id_mode:
-        raise EngineError(
-            f"store at {store_path} was built with id_mode="
-            f"{prev.get('id_mode', 'hash')}; an explicit conflicting value "
-            "would mix id namespaces — rebuild or omit the flag to inherit"
-        )
-    if id_mode not in ("hash", "dense"):
-        raise EngineError(f"unknown id_mode: {id_mode}")
-    if fields is not None:
-        import re as _re
-
-        fields = tuple(fields)
-        for f_ in fields:
-            # dotted paths index NESTED object fields ("meta.author") — the
-            # reference ships arbitrarily nested documents
-            # (test/handler-tests.js:248, dot paths :1055-1096) which ES
-            # exposes as per-field queries; each dot segment must be a plain
-            # identifier so the path parses identically as a Spark struct
-            # accessor, a SQL expression, and a term-prefix qualifier
-            if not _re.fullmatch(
-                r"[A-Za-z_][A-Za-z0-9_]*(\.[A-Za-z_][A-Za-z0-9_]*)*", f_
-            ):
-                raise EngineError(f"invalid field name: {f_!r}")
-        if len(set(fields)) != len(fields):
-            raise EngineError(f"duplicate field names: {fields}")
-    prev_fields = tuple(prev.get("fields") or ()) or None
-    if fields is None:
-        fields = prev_fields
-    elif committed and prev and prev_fields != fields:
-        raise EngineError(
-            f"store at {store_path} was built with fields={prev_fields}; an "
-            "explicit conflicting value would mix qualified and unqualified "
-            "term namespaces — rebuild or omit the value to inherit"
-        )
-    prev_eg = tuple(prev.get("edge_ngrams") or ()) or None
-    if edge_ngrams is None:
-        edge_ngrams = prev_eg
-    else:
-        if fields is not None and not prev_eg:
-            raise EngineError(
-                "edge_ngrams is mutually exclusive with fields= — the "
-                "search_as_you_type subfields are synthesized from the "
-                "single content column"
-            )
-        edge_ngrams = tuple(sorted({int(g) for g in edge_ngrams}))
-        if not edge_ngrams or any(not 2 <= g <= 4 for g in edge_ngrams):
-            raise EngineError(
-                "edge_ngrams: shingle sizes must be distinct ints in 2..4"
-            )
-        if committed and prev and prev_eg != edge_ngrams:
-            raise EngineError(
-                f"store at {store_path} was built with edge_ngrams="
-                f"{prev_eg}; an explicit conflicting value would change "
-                "the subfield set mid-store — rebuild or omit to inherit"
-            )
-    if edge_ngrams:
-        sayt_fields = (
-            content_col,
-            *(f"{content_col}._{g}gram" for g in edge_ngrams),
-            f"{content_col}._index_prefix",
-        )
-        if fields is None:
-            fields = sayt_fields
-        elif fields != sayt_fields:
-            raise EngineError(
-                f"store at {store_path}: fields={fields} conflicts with "
-                f"the edge_ngrams subfield set {sayt_fields}"
-            )
-    prev_dmc = tuple(prev.get("doc_meta_cols") or ()) or None
-    if doc_meta_cols is None:
-        doc_meta_cols = prev_dmc
-    else:
-        doc_meta_cols = tuple(doc_meta_cols)
-        reserved = {
-            "part", "term", "seg", "block_id", "n_docs", "doc_first",
-            "doc_last", "max_tf", "min_dl", "doc_bytes", "tf_bytes",
-            "dl_bytes", "pos_bytes", "term_bucket", "doc_int", "dl",
-            "doc_seg", "batch", "doc_id", "index_name", "doc_type",
-            "parent", "version", "content_sha256", "lang", "ts",
-            "field_dls",
-        }
-        clash = sorted(set(doc_meta_cols) & reserved)
-        if clash:
-            raise EngineError(
-                f"doc_meta_cols {clash} collide with reserved store "
-                "columns — rename the corpus columns"
-            )
-        both = sorted(set(doc_meta_cols) & set(fields or ()))
-        if both:
-            # the fused tokenize pass consumes field columns (they become
-            # qualified postings, operators/ids.tokenize_count_rows) — a
-            # column cannot ALSO ride the doc markers; silently dropping
-            # it would make doc_stats reads fail later, so refuse here
-            raise EngineError(
-                f"doc_meta_cols {both} are also indexed fields — project "
-                "a duplicate column (e.g. .withColumn('x_meta', col('x')))"
-                " and list that as the meta column"
-            )
-        if committed and prev and prev_dmc != doc_meta_cols:
-            raise EngineError(
-                f"store at {store_path} was built with doc_meta_cols="
-                f"{prev_dmc}; an explicit conflicting value would change the "
-                "marker schema mid-store — rebuild or omit the value to "
-                "inherit"
-            )
-    if num_buckets is None:
-        num_buckets = int(prev.get("num_buckets", DEFAULT_BUCKETS))
-    elif (
-        committed
-        and prev
-        and int(prev.get("num_buckets", num_buckets)) != int(num_buckets)
-    ):
-        raise EngineError(
-            f"store at {store_path} was built with num_buckets="
-            f"{prev.get('num_buckets')}; an explicit conflicting value would "
-            "write blocks under a second pmod() layout and break term_bucket "
-            "pruning — rebuild or omit the value to inherit"
-        )
+    layout = StoreLayout.resolve(
+        store_path, content_col=content_col, segment_docs=segment_docs,
+        positions=positions, lm_stats=lm_stats, id_mode=id_mode,
+        fields=fields, edge_ngrams=edge_ngrams, doc_meta_cols=doc_meta_cols,
+        num_buckets=num_buckets,
+    )
 
     # structured logging middleware analog (lib/handler.js:28): one JSON
     # event stream per run — see jsonlog.py
     log_event(
         LOG, "build.start", store=store_path, num_batches=num_batches,
-        num_buckets=num_buckets, positions=bool(positions), id_mode=id_mode,
+        num_buckets=layout.num_buckets, positions=layout.positions,
+        id_mode=layout.id_mode,
     )
 
     # --- before_hook (lib/handler.js:32-34) ---
@@ -372,14 +443,14 @@ def build_index(
         mapped = fieldmap.apply_field_mapping(
             corpus, cfg, key_cols=key_cols, content_col=content_col
         )
-        if fields and not edge_ngrams:
+        if layout.fields and not layout.edge_ngrams:
             # multi-field: the north-rule sha covers EVERY indexed field
             # (deterministic field order, unit-separator joined) — not just
             # content_col, which may not even exist on a fields corpus
             # (search_as_you_type subfields are DERIVED — the root content
             # sha already covers them)
             mapped = mapped.withColumn(
-                "content_sha256", _fields_sha(fields)
+                "content_sha256", _fields_sha(layout.fields)
             )
 
         # --- per-record error channel (lib/handler.js:41,127-133) ---
@@ -503,19 +574,11 @@ def build_index(
                 )
             )
             nd, nb = _build_batch(
-                part, store_path, b, name,
+                part, store_path, b, name, layout,
                 content_col=content_col,
-                segment_docs=segment_docs,
-                num_buckets=num_buckets,
                 retries=cfg.retries,
-                positions=positions,
-                id_mode=id_mode,
                 dense_partitions=dense_partitions,
                 sink_options=cfg.sink_options,
-                fields=fields,
-                lm_stats=lm_stats,
-                doc_meta_cols=doc_meta_cols or (),
-                edge_ngrams=edge_ngrams,
                 n_docs_hint=(
                     batch_counts.get(b) if counts_exact else None
                 ),
@@ -525,11 +588,7 @@ def build_index(
             total_blocks += nb
 
         _finalize_store(
-            spark, store_path, segment_docs, num_buckets,
-            positions=positions, id_mode=id_mode, fields=fields,
-            lm_stats=lm_stats, doc_meta_cols=doc_meta_cols,
-            edge_ngrams=edge_ngrams,
-            precomputed_audit=audit_sink or None,
+            spark, store_path, layout, precomputed_audit=audit_sink or None
         )
         result = BuildResult(
             took_sec=time.monotonic() - t0,
@@ -569,19 +628,12 @@ def _build_batch(
     store_path: str,
     batch_idx: int,
     batch_name: str,
+    layout: StoreLayout,
     *,
     content_col: str,
-    segment_docs: int,
-    num_buckets: int,
     retries: int = 0,
-    positions: bool = False,
-    id_mode: str = "hash",
     dense_partitions: int | None = None,
     sink_options: dict | None = None,
-    fields: tuple[str, ...] | None = None,
-    lm_stats: bool = False,
-    doc_meta_cols: tuple[str, ...] = (),
-    edge_ngrams: tuple[int, ...] | None = None,
     n_docs_hint: int | None = None,
     audit_sink: dict | None = None,
 ) -> tuple[int, int]:
@@ -593,13 +645,9 @@ def _build_batch(
     while True:
         try:
             return _build_batch_once(
-                docs, store_path, batch_idx, batch_name,
-                content_col=content_col, segment_docs=segment_docs,
-                num_buckets=num_buckets, positions=positions,
-                id_mode=id_mode, dense_partitions=dense_partitions,
-                sink_options=sink_options, fields=fields,
-                lm_stats=lm_stats, doc_meta_cols=doc_meta_cols,
-                edge_ngrams=edge_ngrams, n_docs_hint=n_docs_hint,
+                docs, store_path, batch_idx, batch_name, layout,
+                content_col=content_col, dense_partitions=dense_partitions,
+                sink_options=sink_options, n_docs_hint=n_docs_hint,
                 audit_sink=audit_sink,
             )
         except Exception:  # noqa: BLE001
@@ -614,18 +662,11 @@ def _build_batch_once(
     store_path: str,
     batch_idx: int,
     batch_name: str,
+    layout: StoreLayout,
     *,
     content_col: str,
-    segment_docs: int,
-    num_buckets: int,
-    positions: bool = False,
-    id_mode: str = "hash",
     dense_partitions: int | None = None,
     sink_options: dict | None = None,
-    fields: tuple[str, ...] | None = None,
-    lm_stats: bool = False,
-    doc_meta_cols: tuple[str, ...] = (),
-    edge_ngrams: tuple[int, ...] | None = None,
     n_docs_hint: int | None = None,
     audit_sink: dict | None = None,
 ) -> tuple[int, int]:
@@ -642,7 +683,8 @@ def _build_batch_once(
     import math
 
     spark = docs.sparkSession
-    if id_mode == "dense":
+    fields, edge_ngrams = layout.fields, layout.edge_ngrams
+    if layout.id_mode == "dense":
         # dense ids: the offsets pass is a column-pruned count aggregation
         # (cheap); the ONE full-width shuffle is the rank repartition.
         # Materialized once — both the term pass and the marker projection
@@ -658,7 +700,9 @@ def _build_batch_once(
             )
         with_id = with_id.localCheckpoint(eager=True)
         # dense ids are contiguous → segments are exact 2^shift-doc slices
-        seg_shift = max(1, min(63, round(math.log2(max(segment_docs, 2)))))
+        seg_shift = max(
+            1, min(63, round(math.log2(max(layout.segment_docs, 2))))
+        )
     else:
         # segment sizing count: the caller's fused control aggregation
         # already knows this batch's row count (n_docs_hint) — a separate
@@ -667,7 +711,7 @@ def _build_batch_once(
         with_id = docs.withColumn(
             "doc_int", F.xxhash64(F.col("doc_id"), F.lit(batch_name))
         )
-        seg_shift = postings.seg_shift_for(n_est, segment_docs)
+        seg_shift = postings.seg_shift_for(n_est, layout.segment_docs)
     mark("count_docs")
     if n_est == 0:
         # an empty batch (small corpus, many batches) writes nothing:
@@ -681,7 +725,7 @@ def _build_batch_once(
         c
         for c in ("doc_id", "index_name", "doc_type", "parent",
                   "version", "content_sha256", "lang", "ts",
-                  *doc_meta_cols)
+                  *layout.doc_meta_cols)
         if c in with_id.columns
     ]
     # SPLIT build pass (one Python crossing + one JVM projection): term
@@ -695,11 +739,11 @@ def _build_batch_once(
     # whole segment write at sf0.1. Both writes pad to one shared file
     # schema, so the on-disk layout (and every reader) is unchanged.
     term_rows = ids.tokenize_terms_rows(
-        with_id, content_col=content_col, positions=positions,
+        with_id, content_col=content_col, positions=layout.positions,
         fields=fields, edge_ngrams=edge_ngrams,
     )
     blocks = postings.encode_term_blocks(
-        term_rows, num_buckets=num_buckets, seg_shift=seg_shift,
+        term_rows, num_buckets=layout.num_buckets, seg_shift=seg_shift,
     )
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     dl_col, fd_col = ids.marker_dl_cols(content_col, fields, edge_ngrams)
@@ -715,14 +759,7 @@ def _build_batch_once(
             "seg", F.pmod(F.col("doc_int"), F.lit(n_shuffle)).cast("long")
         )
     )
-    file_cols: list[tuple[str, str]] = [
-        ("term", "string"), ("seg", "bigint"), ("block_id", "int"),
-        ("n_docs", "int"), ("doc_first", "bigint"), ("doc_last", "bigint"),
-        ("max_tf", "int"), ("min_dl", "int"), ("doc_bytes", "binary"),
-        ("tf_bytes", "binary"), ("dl_bytes", "binary"),
-        ("pos_bytes", "binary"),
-    ]
-    file_cols += [
+    file_cols = postings.BLOCK_FIELDS + [
         (c, with_id.schema[c].dataType.simpleString()) for c in meta_src
     ]
     if fields:
@@ -766,7 +803,7 @@ def _build_batch_once(
             options=sink_options,
         ),
     ]
-    if lm_stats:
+    if layout.lm_stats:
         # index-time LM statistics: unigram + bigram collection frequencies
         # from one JVM-only pass over this batch's docs (operators/lm.py).
         # Part of the resumable batch unit — the checkpoint below covers it.
@@ -819,38 +856,19 @@ def _build_batch_once(
                 for i in range(n_fields)
             ],
         ]
-    def _readback_agg():
-        return (
-            batch_df.groupBy("part", "seg")
-            .agg(
-                F.count("*").alias("rows"),
-                F.sum("n_docs").alias("postings"),
-                F.sum(
-                    F.length("doc_bytes") + F.length("tf_bytes")
-                    + F.length("dl_bytes")
-                ).alias("compressed_bytes"),
-                *audit_aggs,
-            )
-            .toPandas()
+    stats = (
+        batch_df.groupBy("part", "seg")
+        .agg(
+            F.count("*").alias("rows"),
+            F.sum("n_docs").alias("postings"),
+            F.sum(
+                F.length("doc_bytes") + F.length("tf_bytes")
+                + F.length("dl_bytes")
+            ).alias("compressed_bytes"),
+            *audit_aggs,
         )
-
-    if audit_sink is not None:
-        # fresh single-batch build: the finalize's term_stats rebuild
-        # depends only on the written blocks (this same read-back frame),
-        # never on the audit numbers — run it CONCURRENTLY with the
-        # read-back aggregation (guide §2.6) and tell the finalize it is
-        # already on disk
-        def _ts_job():
-            blocks_rb = batch_df.filter(F.col("part") == "block")
-            ts = postings.term_stats(blocks_rb).sortWithinPartitions("term")
-            store_io.write_parquet(
-                ts, os.path.join(store_path, "term_stats")
-            )
-
-        stats = run_concurrent(_readback_agg, _ts_job)[0]
-        audit_sink["term_stats_written"] = True
-    else:
-        stats = _readback_agg()
+        .toPandas()
+    )
     n_docs = int(stats.loc[stats["part"] == "doc", "rows"].sum())
     if audit_sink is not None:
         dp = stats[stats["part"] == "doc"]
@@ -866,22 +884,19 @@ def _build_batch_once(
                 "avgdl": (
                     float(dp["_a_dl"].sum()) / n_docs if n_docs else 0.0
                 ),
-                "avgdl_fields": {
-                    f_: (
-                        float(dp[f"_a_f{i}"].sum()) / n_docs
-                        if n_docs
-                        else 0.0
-                    )
-                    for i, f_ in enumerate(fields or ())
-                },
                 # exact integer token totals: the phrase suggester's LM
                 # constants — recorded in meta so query time never runs a
                 # doc-stat aggregation job for them
                 "dl_sum": int(dp["_a_dl"].sum()),
-                "field_dl_sums": [
-                    int(dp[f"_a_f{i}"].sum())
-                    for i in range(len(fields or ()))
-                ],
+                **{
+                    f"_af{i}": (
+                        float(dp[f"_a_f{i}"].sum()) / n_docs
+                        if n_docs else 0.0
+                    )
+                    for i in range(n_fields)
+                },
+                **{f"_fs{i}": int(dp[f"_a_f{i}"].sum())
+                   for i in range(n_fields)},
             }
         )
     bp = stats[stats["part"] == "block"]
@@ -938,14 +953,7 @@ def _write_small_parquet(pdf, path: str) -> None:
 def _finalize_store(
     spark: SparkSession,
     store_path: str,
-    segment_docs: int,
-    num_buckets: int,
-    positions: bool | None = None,
-    id_mode: str | None = None,
-    fields: tuple[str, ...] | None = None,
-    lm_stats: bool | None = None,
-    doc_meta_cols: tuple[str, ...] | None = None,
-    edge_ngrams: tuple[int, ...] | None = None,
+    layout: StoreLayout,
     precomputed_audit: dict | None = None,
     derived_stats: bool = True,
     segments_df: DataFrame | None = None,
@@ -953,8 +961,12 @@ def _finalize_store(
 ) -> None:
     """Resolve liveness (external versioning + tombstones → ``dead`` doc_int
     list), recompute global stats (N, avgdl over LIVE docs — per field in
-    multi-field stores) and term_stats; write meta.json. Aggregates touch
-    doc_stats and block metadata columns only — never the posting bytes.
+    multi-field stores) and term_stats; write meta.json from ``layout``
+    (``StoreLayout.write_meta``; the caller resolved or read it — finalize
+    never re-reads the layout flags). Aggregates touch doc_stats and block
+    metadata columns only — never the posting bytes. term_stats is written
+    only after the duplicate-doc / collision audit passed, so a rejected
+    batch leaves the previous term_stats in place.
 
     ``precomputed_audit``: fused audit stats from the batch read-back
     (fresh single-batch builds only — the caller guarantees the store's
@@ -978,22 +990,7 @@ def _finalize_store(
         seg_df = store_io.read_store(spark, store_path)
     doc_stats = seg_df.filter(F.col("part") == "doc")
     tomb_path = os.path.join(store_path, "tombstones")
-    if fields is None and store_io.read_meta(store_path).get("fields"):
-        # a finalize without the flag (CDC apply / compact) must still
-        # recompute the per-field stats of a multi-field store
-        fields = tuple(store_io.read_meta(store_path)["fields"])
-    if edge_ngrams is None:
-        # CDC apply / compact finalizes without the flag — preserve it
-        edge_ngrams = (
-            tuple(store_io.read_meta(store_path).get("edge_ngrams") or ())
-            or None
-        )
-    if doc_meta_cols is None:
-        # CDC apply / compact finalizes without the flag — preserve it
-        doc_meta_cols = (
-            tuple(store_io.read_meta(store_path).get("doc_meta_cols") or ())
-            or None
-        )
+    fields = layout.fields
     if fields and "field_dls" not in doc_stats.columns:
         raise EngineError(
             f"store at {store_path} is multi-field ({fields}) but its "
@@ -1004,18 +1001,9 @@ def _finalize_store(
         for i in range(len(fields or ()))
     ]
 
-    # the batch read-back may have already written term_stats concurrently
-    # with its audit aggregation (fresh single-batch fast path)
-    ts_written = bool(
-        (precomputed_audit or {}).pop("term_stats_written", False)
-    )
-
-    def _derived_stats_job(skip_ts: bool = False):
+    def _derived_stats_job():
         # term_stats rebuild + lm_stats merge — block-metadata work only,
         # independent of the doc-stat audit/liveness jobs
-        if skip_ts:
-            _lm_merge_job()
-            return
         blocks = store_io.select_blocks(seg_df)
         # sortWithinPartitions("term"): no extra exchange (sorts the agg's
         # own output partitions), but each output file becomes term-ordered,
@@ -1025,14 +1013,8 @@ def _finalize_store(
         # of scanning the vocabulary (guide §6).
         ts = postings.term_stats(blocks).sortWithinPartitions("term")
         store_io.write_parquet(ts, os.path.join(store_path, "term_stats"))
-        _lm_merge_job()
-
-    def _lm_merge_job():
         lm_root = os.path.join(store_path, "lm")
-        has_lm = (
-            os.path.isdir(lm_root) if lm_stats is None else bool(lm_stats)
-        )
-        if has_lm and os.path.isdir(lm_root):
+        if layout.lm_stats and os.path.isdir(lm_root):
             batch_dirs = [
                 d for d in os.listdir(lm_root) if d.startswith("batch=")
             ]
@@ -1065,81 +1047,48 @@ def _finalize_store(
                 )
                 store_io.write_parquet(grams, lm_out)
 
-    derived_written = False
+    n_fields = len(fields or ())
 
-    # ONE aggregation fuses the collision audit (distinct doc_int == rows),
-    # duplicate-doc detection (distinct doc_id == rows), and the live stats.
-    # A fresh single-batch build hands the same numbers in from its
-    # read-back aggregation (precomputed_audit) and skips this job.
-    if precomputed_audit is not None:
-        pa_fields = precomputed_audit.get("avgdl_fields", {})
-        audit = {
-            "n": precomputed_audit["n"],
-            "n_ids": precomputed_audit["n_ids"],
-            "n_doc_ids": precomputed_audit["n_doc_ids"],
-            "avgdl": precomputed_audit["avgdl"],
-            "dl_sum": precomputed_audit.get("dl_sum"),
-            "field_dl_sums": precomputed_audit.get("field_dl_sums"),
-            **{
-                f"_af{i}": pa_fields.get(f_, 0.0)
-                for i, f_ in enumerate(fields or ())
-            },
-        }
-    elif assume_unique:
-        # post-compaction: no new doc ids since the pre-compaction audit
-        # (docs only removed) — skip the countDistinct expansion. The
-        # uniqueness checks below are trivially satisfied here, so the
-        # term_stats rebuild (block metadata, disjoint from the doc-stat
-        # audit) runs CONCURRENTLY with this aggregation (guide §2.6)
-        # instead of waiting its own full job latency behind it.
-        from ..functions.concurrency import run_concurrent
-
-        _plain_holder: dict = {}
-
-        def _audit_job():
-            _plain_holder["r"] = doc_stats.agg(
-                F.count("*").alias("n"),
-                F.avg("dl").alias("avgdl"),
-                F.sum("dl").alias("_dlsum"),
-                *field_avgs,
-                *[
-                    F.sum(F.col("field_dls")[i]).alias(f"_fs{i}")
-                    for i in range(len(fields or ()))
-                ],
-            ).first()
-
-        if derived_stats:
-            run_concurrent(_audit_job, _derived_stats_job)
-            derived_written = True
-        else:
-            _audit_job()
-        plain = _plain_holder["r"]
-        audit = {
-            "n": plain["n"], "n_ids": plain["n"], "n_doc_ids": plain["n"],
-            "avgdl": plain["avgdl"],
-            "dl_sum": int(plain["_dlsum"] or 0),
-            "field_dl_sums": [
-                int(plain[f"_fs{i}"] or 0)
-                for i in range(len(fields or ()))
-            ],
-            **{
-                f"_af{i}": plain[f"_af{i}"]
-                for i in range(len(fields or ()))
-            },
-        }
-    else:
+    def _audit() -> dict:
+        # ONE aggregation fuses the collision audit (distinct doc_int ==
+        # rows), duplicate-doc detection (distinct doc_id == rows), and the
+        # live stats. Post-compaction (assume_unique) no new doc ids
+        # entered since the pre-compaction audit — docs were only removed
+        # — so the countDistinct expansion is skipped.
         audit = doc_stats.agg(
             F.count("*").alias("n"),
-            F.countDistinct("doc_int").alias("n_ids"),
-            F.countDistinct("doc_id").alias("n_doc_ids"),
+            *([] if assume_unique else [
+                F.countDistinct("doc_int").alias("n_ids"),
+                F.countDistinct("doc_id").alias("n_doc_ids"),
+            ]),
             F.avg("dl").alias("avgdl"),
-            F.sum("dl").alias("_dlsum"),
+            F.sum("dl").alias("dl_sum"),
             *field_avgs,
             *[
                 F.sum(F.col("field_dls")[i]).alias(f"_fs{i}")
-                for i in range(len(fields or ()))
+                for i in range(n_fields)
             ],
-        ).first()
+        ).first().asDict()
+        if assume_unique:
+            audit["n_ids"] = audit["n_doc_ids"] = audit["n"]
+        return audit
+
+    derived_written = False
+    if precomputed_audit is not None:
+        # a fresh single-batch build hands the same numbers in from its
+        # read-back aggregation and skips this job
+        audit = precomputed_audit
+    elif assume_unique and derived_stats:
+        # the uniqueness checks below are trivially satisfied here, so the
+        # term_stats rebuild (block metadata, disjoint from the doc-stat
+        # audit) runs CONCURRENTLY with the aggregation (guide §2.6)
+        # instead of waiting its own full job latency behind it
+        from ..functions.concurrency import run_concurrent
+
+        audit = run_concurrent(_audit, _derived_stats_job)[0]
+        derived_written = True
+    else:
+        audit = _audit()
     if audit["n"] != audit["n_ids"]:
         if audit["n"] != audit["n_doc_ids"]:
             # the far more likely cause: the same doc_id indexed twice in
@@ -1172,15 +1121,10 @@ def _finalize_store(
         }
         # live == all markers here, so the exact token totals are valid
         # index-statistics for the suggester's LM constants
-        if isinstance(audit, dict):
-            dl_sum_meta = audit.get("dl_sum")
-            field_dl_sums_meta = audit.get("field_dl_sums")
-        else:
-            dl_sum_meta = int(audit["_dlsum"] or 0)
-            field_dl_sums_meta = [
-                int(audit[f"_fs{i}"] or 0)
-                for i in range(len(fields or ()))
-            ]
+        dl_sum_meta = int(audit["dl_sum"] or 0)
+        field_dl_sums_meta = [
+            int(audit[f"_fs{i}"] or 0) for i in range(n_fields)
+        ]
     else:
         fd_col = (
             [F.col("field_dls")]
@@ -1262,40 +1206,16 @@ def _finalize_store(
         # block-metadata scan + shuffle + write thrown away moments later
         return
     if not derived_written:
-        _derived_stats_job(skip_ts=ts_written)
-    lm_root = os.path.join(store_path, "lm")
-    if lm_stats is None:
-        lm_stats = os.path.isdir(lm_root)
-    prev_meta = store_io.read_meta(store_path)
-    if segment_docs == 0:
-        segment_docs = prev_meta.get("segment_docs", 0)
-    if positions is None:
-        positions = bool(prev_meta.get("positions", False))
-    if id_mode is None:
-        id_mode = prev_meta.get("id_mode", "hash")
-    meta = {
-        "n_docs": n_live,
-        "avgdl": avgdl,
-        "segment_docs": segment_docs,
-        "num_buckets": num_buckets,
-        "positions": bool(positions),
-        "id_mode": id_mode,
-        "lm_stats": bool(lm_stats),
-    }
-    if dl_sum_meta is not None:
-        meta["dl_sum"] = int(dl_sum_meta)
-    if fields:
-        meta["fields"] = list(fields)
-        meta["avgdl_fields"] = avgdl_fields
-        if field_dl_sums_meta is not None:
-            meta["field_dl_sums"] = [int(x) for x in field_dl_sums_meta]
-    if doc_meta_cols:
-        meta["doc_meta_cols"] = list(doc_meta_cols)
-    if edge_ngrams:
-        meta["edge_ngrams"] = list(edge_ngrams)
-    meta["segments_schema"] = _tree_schema(seg_df.schema).jsonValue()
-    with open(os.path.join(store_path, "meta.json"), "w") as f:
-        json.dump(meta, f)
+        _derived_stats_job()
+    layout.write_meta(
+        store_path,
+        {
+            "n_docs": n_live, "avgdl": avgdl, "dl_sum": dl_sum_meta,
+            "avgdl_fields": avgdl_fields,
+            "field_dl_sums": field_dl_sums_meta,
+        },
+        _tree_schema(seg_df.schema).jsonValue(),
+    )
 
 
 def _tree_schema(schema: ST.StructType) -> ST.StructType:
@@ -1374,7 +1294,7 @@ def verify_sha256(corpus: DataFrame, cfg: IndexerConfig, store_path: str,
     """
     spark = corpus.sparkSession
     if fields is None:
-        fields = tuple(store_io.read_meta(store_path).get("fields") or ()) or None
+        fields = StoreLayout.read(store_path).fields
     mapped = fieldmap.apply_field_mapping(
         corpus, cfg, key_cols=key_cols, content_col=content_col
     ).filter(F.col("error").isNull())

@@ -70,9 +70,8 @@ def delete_by_query(
         store.path, batch_name,
         {"docs": 0, "blocks": 0, "deletes": n_del, "cdc_only": True},
     )
-    meta = store_io.read_meta(store.path)
     build._finalize_store(
-        spark, store.path, 0, int(meta["num_buckets"])
+        spark, store.path, build.StoreLayout.read(store.path)
     )
     return {"deleted": n_del, "batch": batch_name}
 

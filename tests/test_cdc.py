@@ -378,3 +378,69 @@ def test_pinned_segment_schema(spark, tmp_path):
     assert answers() == want
     cdc.apply_changes(_events_df(spark), CFG, path, segment_docs=64)
     assert "segments_schema" in store_io.read_meta(path)
+
+
+@pytest.mark.parametrize("positions", [False, True])
+def test_compaction_blocks_equal_encode_blocks_reference(
+    spark, tmp_path, positions
+):
+    """Every block compaction writes equals codec.encode_blocks over that
+    block's kept postings (and kept per-doc positions): blocks that lost no
+    doc keep their bytes, emptied blocks drop, the rest re-encode. At least
+    one block must actually change, so the check cannot pass vacuously."""
+    from dynamo2es_lambda_spark.functions import codec
+    from dynamo2es_lambda_spark.sources import store_io
+
+    path = str(tmp_path / f"cmp_pos{int(positions)}")
+    build.build_index(
+        spark.createDataFrame(_corpus0()), CFG, path,
+        segment_docs=64, num_buckets=8, positions=positions,
+    )
+    cdc.apply_changes(_events_df(spark), CFG, path, segment_docs=64)
+    cols = ["term", "seg", "block_id", "n_docs", "doc_first", "doc_last",
+            "max_tf", "min_dl", "doc_bytes", "tf_bytes", "dl_bytes",
+            "pos_bytes"]
+    before = store_io.read_blocks(spark, path).select(*cols).toPandas()
+    dead = set(
+        spark.read.parquet(os.path.join(path, "dead"))
+        .toPandas()["doc_int"].tolist()
+    )
+    assert dead
+    want, n_changed = [], 0
+    for row in before.itertuples(index=False):
+        ids, tfs, dls = codec.decode_block(
+            row.doc_first, row.doc_bytes, row.tf_bytes, row.dl_bytes
+        )
+        keep = ~np.isin(ids, list(dead))
+        if keep.all():
+            want.append(tuple(row))
+            continue
+        if not keep.any():
+            continue
+        n_changed += 1
+        payloads = None
+        if row.pos_bytes is not None:
+            flat, starts = codec.decode_block_positions(row.pos_bytes, tfs)
+            payloads = [
+                codec.varbyte_encode(codec.segmented_deltas(
+                    flat[starts[j]: starts[j] + tfs[j]], [tfs[j]]
+                ))
+                for j in np.flatnonzero(keep)
+            ]
+        (b,) = codec.encode_blocks(
+            ids[keep], tfs[keep], dls[keep], pos_payloads=payloads
+        )
+        b.update(term=row.term, seg=row.seg, block_id=row.block_id)
+        want.append(tuple(b[c] for c in cols))
+    assert n_changed >= 1
+    assert (before["pos_bytes"].notna().all() if positions
+            else before["pos_bytes"].isna().all())
+
+    cdc.compact_store(spark, path)
+    after = store_io.read_blocks(spark, path).select(*cols).toPandas()
+    got = [tuple(r) for r in after.itertuples(index=False)]
+
+    def key(t):
+        return tuple(b"" if v is None else v for v in t)
+
+    assert sorted(map(key, got)) == sorted(map(key, want))

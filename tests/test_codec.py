@@ -2,7 +2,7 @@
 no codec tests — ours are property-based per SURVEY.md §5.2.8)."""
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from dynamo2es_lambda_spark.functions import codec
@@ -166,3 +166,54 @@ def test_decode_blocks_matches_per_block(blocks, data):
     ids, tfs, dls = codec.decode_blocks(cols)
     assert dls is None
     assert ids.tolist() == got[0].tolist() and tfs.tolist() == got[1].tolist()
+
+
+_RUN_COLS = ("n_docs", "doc_first", "doc_last", "max_tf", "min_dl",
+             "doc_bytes", "tf_bytes", "dl_bytes")
+
+
+@given(
+    st.lists(
+        st.tuples(
+            st.integers(min_value=0, max_value=2**50),        # doc_first
+            st.lists(
+                st.tuples(
+                    st.integers(min_value=1, max_value=2**35),  # doc gap
+                    st.integers(min_value=1, max_value=2**21),  # tf
+                    st.integers(min_value=1, max_value=2**21),  # dl
+                ),
+                max_size=codec.BLOCK_SIZE - 1,
+            ),
+            st.integers(min_value=1, max_value=2**21),          # first tf
+            st.integers(min_value=1, max_value=2**21),          # first dl
+        ),
+        max_size=12,
+    )
+)
+@settings(max_examples=80, deadline=None)
+@example([(0, [], 1, 1)])                                   # one 1-doc block
+@example([(5, [], 300, 2**20)] * 3)                         # 1-doc blocks
+@example([(2**40, [(2**30, 200, 2**20)] * 127, 129, 1)])    # a full block
+def test_encode_runs_matches_encode_blocks(blocks):
+    """codec.encode_runs over consecutive blocks of 1-128 docs == per-block
+    codec.encode_blocks, column for column (multi-byte gaps, tfs and dls
+    included)."""
+    ids, tfs, dls, sizes, want = [], [], [], [], []
+    for first, rows, tf0, dl0 in blocks:
+        b_ids = first + np.cumsum([0] + [r[0] for r in rows], dtype=np.int64)
+        b_tfs = np.array([tf0] + [r[1] for r in rows], dtype=np.int64)
+        b_dls = np.array([dl0] + [r[2] for r in rows], dtype=np.int64)
+        (b,) = codec.encode_blocks(b_ids, b_tfs, b_dls)
+        want.append(b)
+        ids.append(b_ids)
+        tfs.append(b_tfs)
+        dls.append(b_dls)
+        sizes.append(b_ids.size)
+    cat = (lambda xs: np.concatenate(xs) if xs else np.zeros(0, np.int64))
+    got = codec.encode_runs(cat(ids), cat(tfs), cat(dls), sizes)
+    assert set(got) == set(_RUN_COLS)
+    for col in _RUN_COLS:
+        assert len(got[col]) == len(want)
+        assert [int(v) if col[-5:] != "bytes" else v for v in got[col]] == [
+            w[col] for w in want
+        ], col

@@ -175,6 +175,23 @@ def test_alias_roundtrip_and_filtering(spark, tmp_path_factory):
     assert len(one.toPandas()) == 1
 
 
+def test_alias_survives_delete_by_query_and_compaction(
+    spark, tmp_path_factory
+):
+    """Aliases live in meta.json; every finalize rewrites meta.json, so it
+    must carry them over — through a delete_by_query finalize and a
+    compaction's."""
+    from dynamo2es_lambda_spark.plans import cdc
+
+    st = _store(spark, tmp_path_factory, "mg_alias_keep")
+    st = manage.put_alias(st, "betas", index="docs", filter_term="beta")
+    assert manage.delete_by_query(spark, st, _q("two"))["deleted"] == 1
+    cdc.compact_store(spark, st.path)
+    st = search.load_store(st.path)
+    got = manage.search_alias(spark, st, "betas", _q("alpha"), k=10)
+    assert set(got.toPandas()["doc_id"]) == {"d0"}
+
+
 def test_alias_unknown_raises_and_index_routing(spark, tmp_path_factory):
     st = _store(spark, tmp_path_factory, "mg_alias2")
     st = manage.put_alias(st, "all-docs", index="docs")

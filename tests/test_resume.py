@@ -9,6 +9,7 @@ import numpy as np
 import pytest
 
 from dynamo2es_lambda_spark import IndexerConfig
+from dynamo2es_lambda_spark.errors import EngineError
 from dynamo2es_lambda_spark.plans import build, search
 from dynamo2es_lambda_spark.sources import synthetic
 
@@ -115,3 +116,34 @@ def test_retry_reruns_batch(spark, corpus, tmp_path_factory):
         build._build_batch_once = orig
     assert calls["n"] == 2
     assert res.n_docs == N
+
+
+def test_rejected_fresh_build_keeps_previous_term_stats(
+    spark, corpus, tmp_path
+):
+    """A fresh single-batch build writes term_stats only after the
+    duplicate-doc audit passed: on a directory holding a term_stats table
+    and no checkpoints, a corpus with a duplicated doc_id raises and the
+    old term_stats files stay byte-for-byte as they were."""
+    path = str(tmp_path / "ts")
+    build.build_index(corpus, CFG, path, segment_docs=64, num_buckets=8)
+    shutil.rmtree(os.path.join(path, "checkpoints"))
+    ts_dir = os.path.join(path, "term_stats")
+
+    def snapshot():
+        return {
+            fn: open(os.path.join(ts_dir, fn), "rb").read()
+            for fn in sorted(os.listdir(ts_dir))
+        }
+
+    before = snapshot()
+    assert any(fn.endswith(".parquet") for fn in before)
+    dup = spark.createDataFrame(
+        [("r", "p", "c", "py", "zebra quokka one"),
+         ("r", "p", "c", "py", "zebra quokka two")],
+        "repo string, path string, commit string, lang string, "
+        "content string",
+    )
+    with pytest.raises(EngineError, match="duplicate doc_ids"):
+        build.build_index(dup, CFG, path, segment_docs=64, num_buckets=8)
+    assert snapshot() == before

@@ -6,6 +6,7 @@ the reference's field mapping ships (lib/handler.js:100)."""
 
 import math
 import random
+import warnings
 
 import duckdb
 import numpy as np
@@ -202,10 +203,18 @@ def test_semantic_dedup_matches_bruteforce(spark):
     emb = spark.createDataFrame(
         pd.DataFrame({"vec_id": ids, "embedding": [list(v) for v in vecs]})
     )
-    got = {
-        r.vec_id: (r.dup_of, r.best_cos_r)
-        for r in ann.semantic_dedup(emb, k=4, tau=0.9).collect()
-    }
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        got = {
+            r.vec_id: (r.dup_of, r.best_cos_r)
+            for r in ann.semantic_dedup(emb, k=4, tau=0.9).collect()
+        }
+    # the pair kernel's signature must not trip pyspark's type-hint
+    # inference for applyInPandas
+    assert not [
+        w for w in caught
+        if "Cannot infer the eval type" in str(w.message)
+    ]
     want = _np_semantic_dedup(ids, vecs, k=4, tau=0.9)
     assert set(got) == set(want) and got  # non-trivial
     for vid, (dup_of, best) in got.items():
