@@ -69,7 +69,8 @@ def main(argv: list[str] | None = None) -> int:
 
     m = sub.add_parser("compact", help="compact the store (segment merge)")
     m.add_argument("--store", required=True)
-    m.add_argument("--buckets", type=int, default=64)
+    m.add_argument("--buckets", type=int, default=None,
+                   help="term-bucket modulus (default: the store's own)")
 
     args = p.parse_args(argv)
     from .config import IndexerConfig

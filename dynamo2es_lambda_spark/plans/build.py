@@ -28,7 +28,7 @@ import json
 import os
 import re
 import time
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -123,10 +123,27 @@ class StoreLayout:
         )
 
     @classmethod
-    def read(cls, store_path: str) -> StoreLayout:
+    def read(
+        cls, store_path: str, num_buckets: int | None = None
+    ) -> StoreLayout:
         """The store's layout as its meta.json records it (defaults for a
-        store not yet finalized)."""
-        return cls._from_meta(store_io.read_meta(store_path))
+        store not yet finalized). ``num_buckets`` is inherit-or-conflict
+        for the writers that add to a store (a CDC batch, a compaction):
+        None inherits; a finalized store's blocks sit under the
+        ``term_bucket=`` directories of its own pmod() modulus, so a
+        different explicit value raises instead of being recorded."""
+        meta = store_io.read_meta(store_path)
+        layout = cls._from_meta(meta)
+        if num_buckets is None:
+            return layout
+        if meta and int(num_buckets) != layout.num_buckets:
+            raise EngineError(
+                f"store at {store_path} was built with num_buckets="
+                f"{layout.num_buckets}; writing under a different pmod() "
+                "layout would break term_bucket pruning — omit the value "
+                "to inherit"
+            )
+        return replace(layout, num_buckets=int(num_buckets))
 
     @classmethod
     def resolve(

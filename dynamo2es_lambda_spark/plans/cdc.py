@@ -204,19 +204,7 @@ def apply_changes(
         # an incremental batch must match the store's layout (positional
         # payloads, id namespace, term-bucket modulus, field set, marker
         # columns, LM statistics): ONE read of the store's record
-        layout = build.StoreLayout.read(store_path)
-        if num_buckets is not None:
-            if (
-                os.path.exists(os.path.join(store_path, "meta.json"))
-                and int(num_buckets) != layout.num_buckets
-            ):
-                raise EngineError(
-                    f"store at {store_path} was built with num_buckets="
-                    f"{layout.num_buckets}; a CDC batch under a different "
-                    "pmod() layout would break term_bucket pruning — omit "
-                    "the value to inherit"
-                )
-            layout = replace(layout, num_buckets=int(num_buckets))
+        layout = build.StoreLayout.read(store_path, num_buckets)
         if segment_docs:
             layout = replace(layout, segment_docs=segment_docs)
         if layout.fields and not layout.edge_ngrams:
@@ -394,8 +382,9 @@ def maybe_compact(
     ``max_dead_frac`` of the marker rows (wasted decode + anti-join work
     per query). Both triggers are DRIVER METADATA reads (directory
     listing + parquet footers — no Spark job); returns whether a
-    compaction ran. The CDC wrapper calls this when
-    ``apply_changes(compact="auto")``."""
+    compaction ran. ``num_buckets`` is forwarded to :func:`compact_store`
+    (None inherits; a value other than the store's raises). The CDC
+    wrapper calls this when ``apply_changes(compact="auto")``."""
     seg_root = store_io.segments_path(store_path)
     n_batches = (
         len([d for d in os.listdir(seg_root) if d.startswith("batch=")])
@@ -424,9 +413,11 @@ def compact_store(
 ) -> None:
     """Segment-merge analog: rewrite postings dropping dead docs, keep only
     live doc_stats rows, clear tombstones. After compaction df/N/avgdl are
-    exact over live docs. ``num_buckets`` defaults to the store's own; the
-    rest of the layout is read once from the store
-    (``build.StoreLayout.read``) and handed to the closing finalize.
+    exact over live docs. Compaction never re-buckets: ``num_buckets``
+    None inherits the store's own modulus, and a different explicit value
+    raises ``EngineError`` with meta.json untouched. The layout is read
+    once from the store (``build.StoreLayout.read``) and handed to the
+    closing finalize.
 
     The dead list is never collected to the driver (it is unbounded under
     churn — VERDICT r1 "What's wrong" #3): blocks and dead doc_ints are
@@ -440,9 +431,7 @@ def compact_store(
     values unchanged — each doc's stream starts absolute, so its deltas
     stay valid without a re-delta. Byte-equal to ``codec.encode_blocks``
     over each block's kept postings and positions."""
-    layout = build.StoreLayout.read(store_path)
-    if num_buckets is not None:
-        layout = replace(layout, num_buckets=int(num_buckets))
+    layout = build.StoreLayout.read(store_path, num_buckets)
     dead_path = os.path.join(store_path, "dead")
     # the dead list has a fixed one-column writer schema — skip inference
     dead_df = spark.read.schema("doc_int bigint").parquet(dead_path)

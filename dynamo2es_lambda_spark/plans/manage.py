@@ -344,30 +344,17 @@ def search_as_of(
     a consistent ranking)."""
     n = int(str(batch).lstrip("b"))
     prefix, avgdl = search._field_of(store, field)
-    n_docs = float(store.meta["n_docs"])
-    qt = search._query_terms(queries)
+    qt, _ = search._weighted_terms(
+        spark, store, search._query_terms(queries, prefix)
+    )
     if qt.empty:
         return spark.createDataFrame(
             [], "qid long, rank int, doc_id string, score_r double"
         )
-    if prefix:
-        qt["term"] = prefix + qt["term"]
-    qt = search._join_term_stats(
-        spark, store, qt, sorted(qt["term"].unique().tolist())
-    ).dropna(subset=["df"])
-    if qt.empty:
-        return spark.createDataFrame(
-            [], "qid long, rank int, doc_id string, score_r double"
-        )
-    qt = qt.copy()
-    from ..functions import bm25
-
-    qt["w"] = bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
-    joined = search._matched_blocks(spark, store, qt)
-    cand = search._score_exhaustive(joined, avgdl)
-    agg = cand.groupBy("qid", "doc_int").agg(F.sum("score").alias("score"))
-    live = live_as_of(spark, store, n).select("doc_int")
-    agg = agg.join(live, "doc_int", "left_semi")
+    agg = search._bm25_hits(
+        spark, store, qt, avgdl,
+        live=live_as_of(spark, store, n).select("doc_int"),
+    )
     stats = store.doc_stats(spark).select("doc_int", "doc_id").dropDuplicates(
         ["doc_int"]
     )

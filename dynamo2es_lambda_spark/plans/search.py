@@ -1,12 +1,19 @@
 """Query engine: top-k BM25 over the posting-block store.
 
 Query lifecycle (SURVEY.md §3.2 engine analog):
-  queries → tokenize (same pinned analyzer) → per-(qid, term) weight
-  ``w = idf(N, df) * (k1+1) * qtf`` → targeted posting read (parquet
-  directory pruning on term_bucket + row-group min/max on term) →
-  broadcast-join of the tiny query-term table → vectorized block scoring
-  (Arrow batches, numpy) → groupBy(qid, doc) partial-sum → rank()-with-ties
-  pre-cut → doc_id join → deterministic final rank (score desc, doc_id asc).
+  queries → tokenize (same pinned analyzer, one pass per batch:
+  ``_query_terms``) → the term step ``_term_table`` (one targeted
+  term_stats read for df(t) + storage bucket, the pre-drop AND ``need``,
+  unindexed terms dropped) → per-(qid, term) weight
+  ``w = idf(N, df) * (k1+1) * qtf`` (``_weighted_terms``) → the candidate
+  aggregate ``_bm25_hits``: targeted posting read (parquet directory
+  pruning on term_bucket + row-group min/max on term) joined to the tiny
+  query-term table → vectorized block scoring (Arrow batches, numpy) →
+  groupBy(qid, doc) partial-sum + matched-term count → dead docs dropped →
+  AND / minimum_should_match gate → rank()-with-ties pre-cut → doc_id join
+  → deterministic final rank (score desc, doc_id asc). Query types whose
+  rule does not fit (clause packing, positional kernels, non-BM25 weights)
+  take only the term step and keep their own aggregation.
 
 The only full shuffle is the per-candidate groupBy — its volume is the
 matched postings, already pruned to query terms. Everything else is
@@ -145,17 +152,26 @@ def load_store(path: str) -> IndexStore:
         return IndexStore(path=path, meta=json.load(f))
 
 
-def _query_terms(queries: pd.DataFrame) -> pd.DataFrame:
+def _query_terms(queries: pd.DataFrame, prefix: str = "") -> pd.DataFrame:
     """(qid, query) → (qid, term, qtf); duplicate query terms fold into qtf
-    (Lucene duplicate-term boost semantics). One tokenize pass over the
-    whole query column."""
+    (Lucene duplicate-term boost semantics) and every term takes the field
+    qualifier ``prefix``. One tokenize pass over the whole query column."""
     toks = analysis.tokenize_series(pd.Series(list(queries["query"])))
     rows = [
-        (int(qid), t, int(c))
+        (int(qid), prefix + t, int(c))
         for qid, q_toks in zip(queries["qid"], toks)
         for t, c in sorted(Counter(q_toks).items())
     ]
     return pd.DataFrame(rows, columns=["qid", "term", "qtf"])
+
+
+def _exact_terms(queries: pd.DataFrame, prefix: str) -> pd.DataFrame:
+    """(qid, term) verbatim dictionary terms (ES ``term``: no analysis,
+    lowercase like the dictionary) → distinct (qid, term, qtf = 1) rows
+    under the field qualifier ``prefix``."""
+    qt = queries[["qid", "term"]].copy()
+    qt["term"] = prefix + qt["term"].astype(str).str.lower()
+    return qt.drop_duplicates().assign(qtf=1)
 
 
 def _field_of(store: IndexStore, field: str | None) -> tuple[str, float]:
@@ -188,6 +204,101 @@ def _drop_dead(spark: SparkSession, store: IndexStore, df: DataFrame) -> DataFra
     if store.n_dead():
         return df.join(store.dead_df(spark), "doc_int", "left_anti")
     return df
+
+
+def _check_mode(mode: str) -> None:
+    if mode not in ("or", "and"):
+        raise ValueError(f"unknown mode {mode!r}: expected 'or' or 'and'")
+
+
+def _term_table(
+    spark: SparkSession, store: IndexStore, qt: pd.DataFrame
+) -> tuple[pd.DataFrame, dict]:
+    """The term step of the query paths: attach df(t) and the storage bucket
+    to a (qid, term, ...) table of field-qualified terms via one targeted
+    term_stats read (metadata-sized), then drop the terms the index does
+    not hold. Returns ``(live_qt, need_by_qid)``: ``need_by_qid`` counts
+    each qid's terms BEFORE the drop — the AND ``need`` an unindexed term
+    can never meet. ``live_qt`` is empty when nothing can match.
+
+    The read is driver-side (:func:`store_io.sorted_read` over the
+    term-sorted files, plans/build._finalize_store); stores pyarrow cannot
+    read take one Spark filter job instead. Tolerates legacy stores
+    without the term_bucket column."""
+    if qt.empty:
+        return qt.assign(df=np.nan), {}
+    terms = sorted(qt["term"].unique().tolist())
+    ts = store_io.sorted_read(
+        os.path.join(store.path, "term_stats"), "term",
+        ("term", "df", "term_bucket"), keys=terms,
+    )
+    if ts is None:
+        ts = store.term_stats(spark).filter(F.col("term").isin(terms))
+        ts = ts.toPandas()
+    ts = ts.set_index("term")
+    qt = qt.assign(df=qt["term"].map(ts["df"]) if len(ts) else float("nan"))
+    if "term_bucket" in ts.columns and len(ts):
+        qt["bucket"] = qt["term"].map(ts["term_bucket"])
+    need_by_qid = qt.groupby("qid").size().to_dict()
+    return qt.dropna(subset=["df"]).copy(), need_by_qid
+
+
+def _weighted_terms(
+    spark: SparkSession, store: IndexStore, qt: pd.DataFrame
+) -> tuple[pd.DataFrame, dict]:
+    """:func:`_term_table` plus the BM25 query weight
+    ``w = bm25.query_weight(N, df, qtf)`` of every live term."""
+    qt, need_by_qid = _term_table(spark, store, qt)
+    qt["w"] = bm25.query_weight(
+        float(store.meta["n_docs"]), qt["df"], qt["qtf"].to_numpy()
+    )
+    return qt, need_by_qid
+
+
+def _all_terms_live(qt: pd.DataFrame, need_by_qid: dict) -> pd.DataFrame:
+    """The rows of the qids that lost no term in the term step — AND and
+    span semantics, where one unindexed term means the qid cannot match."""
+    n_live = qt.groupby("qid")["term"].transform("size")
+    return qt[n_live == qt["qid"].map(need_by_qid)]
+
+
+def _bm25_hits(
+    spark: SparkSession,
+    store: IndexStore,
+    qt: pd.DataFrame,
+    avgdl: float,
+    mode: str = "or",
+    need: dict | None = None,
+    msm: int | None = None,
+    live: DataFrame | None = None,
+) -> DataFrame:
+    """The BM25 candidate aggregate of a weighted term table: pruned block
+    read → exhaustive scoring → ONE groupBy(qid, doc_int) with the summed
+    score and ``nt`` (matched distinct terms) → dead docs dropped → the
+    gate: ``mode="and"`` keeps docs matching all ``need[qid]`` terms,
+    otherwise ``msm`` (when set) keeps docs matching at least that many.
+    ``live`` (a doc_int frame) replaces the dead-list anti-join with a
+    semi-join on that set (a point-in-time live list). Returns
+    (qid, doc_int, score, nt)."""
+    _check_mode(mode)
+    cand = _score_exhaustive(_matched_blocks(spark, store, qt), avgdl)
+    agg = cand.groupBy("qid", "doc_int").agg(
+        F.sum("score").alias("score"), F.count("*").alias("nt")
+    )
+    if live is None:
+        agg = _drop_dead(spark, store, agg)
+    else:
+        agg = agg.join(live, "doc_int", "left_semi")
+    if mode == "and":
+        need_df = spark.createDataFrame(
+            pd.DataFrame({"qid": list(need), "need": list(need.values())})
+        )
+        return agg.join(F.broadcast(need_df), "qid").filter(
+            F.col("nt") == F.col("need")
+        ).drop("need")
+    if msm is not None:
+        return agg.filter(F.col("nt") >= int(msm))
+    return agg
 
 
 def search(
@@ -232,55 +343,28 @@ def search(
     candidates below the cursor before they may set the heap threshold,
     so deep pages keep block-max pruning instead of falling back to an
     exhaustive scan."""
-    if mode not in ("or", "and"):
-        raise ValueError(f"unknown mode {mode!r}: expected 'or' or 'and'")
-    n_docs = float(store.meta["n_docs"])
+    _check_mode(mode)
     prefix, avgdl = _field_of(store, field)
-    qt = _query_terms(queries)
-    if qt.empty:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    if prefix:
-        qt["term"] = prefix + qt["term"]
-    terms = sorted(qt["term"].unique().tolist())
-
-    # df(t) + storage-bucket lookup — ONE tiny targeted read
-    qt = _join_term_stats(spark, store, qt, terms)
     # AND semantics count ALL query terms — a term absent from the index can
     # never match, so such queries return empty (ES operator=and behavior)
-    n_terms_by_qid = qt.groupby("qid").size().to_dict()
-    qt = qt.dropna(subset=["df"])
+    qt, n_terms_by_qid = _weighted_terms(
+        spark, store, _query_terms(queries, prefix)
+    )
     if qt.empty:
         return spark.createDataFrame([], RESULT_SCHEMA)
-    qt["w"] = bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
-
-    joined = _matched_blocks(spark, store, qt)
-
-    allowed = None
-    if index is not None:
-        allowed = store.doc_stats(spark).filter(
-            F.col("index_name") == index
-        ).select("doc_int")
 
     if algo == "exhaustive":
-        cand = _score_exhaustive(joined, avgdl)
-        agg = cand.groupBy("qid", "doc_int").agg(
-            F.sum("score").alias("score"), F.count("*").alias("nt")
+        agg = _bm25_hits(
+            spark, store, qt, avgdl, mode, need=n_terms_by_qid,
+            msm=minimum_should_match,
         )
-        agg = _drop_dead(spark, store, agg)
-        if allowed is not None:
+        if index is not None:
+            allowed = store.doc_stats(spark).filter(
+                F.col("index_name") == index
+            ).select("doc_int")
             agg = agg.join(allowed, "doc_int", "left_semi")
-        if minimum_should_match is not None and mode == "or":
-            agg = agg.filter(F.col("nt") >= int(minimum_should_match))
-        if mode == "and":
-            need = spark.createDataFrame(
-                pd.DataFrame(
-                    {"qid": list(n_terms_by_qid), "need": list(n_terms_by_qid.values())}
-                )
-            )
-            agg = agg.join(F.broadcast(need), "qid").filter(
-                F.col("nt") == F.col("need")
-            )
     elif algo == "wand":
+        joined = _matched_blocks(spark, store, qt)
         constraints = None
         if index is not None or store.n_dead():
             constraints = _segment_constraints(
@@ -351,15 +435,9 @@ def explain_score(
     dead doc_id explains to empty."""
     prefix, avgdl = _field_of(store, field)
     n_docs = float(store.meta["n_docs"])
-    qt = _query_terms(pd.DataFrame({"qid": [0], "query": [query]}))
-    if qt.empty:
-        return spark.createDataFrame([], EXPLAIN_SCHEMA)
-    if prefix:
-        qt["term"] = prefix + qt["term"]
-    qt = _join_term_stats(
-        spark, store, qt, sorted(qt["term"].unique().tolist())
-    )
-    qt = qt.dropna(subset=["df"])
+    qt, _ = _term_table(spark, store, _query_terms(
+        pd.DataFrame({"qid": [0], "query": [query]}), prefix
+    ))
     if qt.empty:
         return spark.createDataFrame([], EXPLAIN_SCHEMA)
     live = _drop_dead(
@@ -373,7 +451,6 @@ def explain_score(
     if row is None:
         return spark.createDataFrame([], EXPLAIN_SCHEMA)
     di = int(row["doc_int"])
-    qt = qt.copy()
     qt["w"] = 1.0  # weights recomputed below; column required by the join
     blocks = (
         _matched_blocks(spark, store, qt)
@@ -434,7 +511,6 @@ def multi_match(
         raise EngineError("multi_match needs at least one field")
     if match_type not in ("best_fields", "most_fields"):
         raise EngineError(f"unknown multi_match type: {match_type}")
-    n_docs = float(store.meta["n_docs"])
     qt0 = _query_terms(queries)
     if qt0.empty:
         return spark.createDataFrame([], RESULT_SCHEMA)
@@ -448,18 +524,10 @@ def multi_match(
         p["boost"] = boost
         p["avgdl"] = f_avgdl
         parts.append(p)
-    qt = pd.concat(parts, ignore_index=True)
-    qt = _join_term_stats(
-        spark, store, qt, sorted(qt["term"].unique().tolist())
-    )
-    qt = qt.dropna(subset=["df"])
+    qt, _ = _weighted_terms(spark, store, pd.concat(parts, ignore_index=True))
     if qt.empty:
         return spark.createDataFrame([], RESULT_SCHEMA)
-    qt = qt.copy()
-    qt["w"] = (
-        bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
-        * qt["boost"].to_numpy()
-    )
+    qt["w"] = qt["w"] * qt["boost"].to_numpy()
     joined = _matched_blocks(spark, store, qt)
     cand = _score_exhaustive(joined, 0.0)  # per-term avgdl column overrides
     per_field = cand.groupBy("qid", "doc_int").agg(
@@ -560,13 +628,9 @@ def search_synonyms(
         return spark.createDataFrame([], RESULT_SCHEMA)
     qt = pd.DataFrame(rows, columns=["qid", "term"])
     qt["qtf"] = 1
-    qt = _join_term_stats(
-        spark, store, qt, sorted(qt["term"].unique().tolist())
-    )
-    qt = qt.dropna(subset=["df"])
+    qt, _ = _term_table(spark, store, qt)
     if qt.empty:
         return spark.createDataFrame([], RESULT_SCHEMA)
-    qt = qt.copy()
     qt["w"] = 1.0  # unused by the raw-tf decode; blending happens below
     df_max = qt.groupby("qid")["df"].max()
     joined = _matched_blocks(spark, store, qt)
@@ -673,10 +737,7 @@ def search_combined_fields(
         parts.append(p)
     qt = pd.concat(parts, ignore_index=True)
     qt["w"] = 1.0  # required by the block join; weights apply post-decode
-    qt = _join_term_stats(
-        spark, store, qt, sorted(qt["term"].unique().tolist())
-    )
-    qt = qt.dropna(subset=["df"])
+    qt, _ = _term_table(spark, store, qt)
     if qt.empty:
         return spark.createDataFrame([], RESULT_SCHEMA)
 
@@ -874,29 +935,18 @@ def _bool_match_scores(
         frames.append(qt_i)
     if not frames:
         return None
-    qt = pd.concat(frames, ignore_index=True)
-
-    qt = _join_term_stats(spark, store, qt, sorted(qt["term"].unique()))
-    # per-qid required must-term count, from the PRE-dropna table: an
-    # unindexed must term still counts toward need (→ can never be met)
-    n_must = {
-        int(cq) // 4: int(n)
-        for cq, n in qt[qt["qid"] % 4 == 0].groupby("qid").size().items()
-    }
-    # qids that DECLARED a should clause (pre-dropna): ES applies
+    qt, need = _weighted_terms(
+        spark, store, pd.concat(frames, ignore_index=True)
+    )
+    # per-qid required must- and filter-term counts from the pre-drop
+    # ``need``: an unindexed must term still counts (→ can never be met)
+    n_must = {cq // 4: int(n) for cq, n in need.items() if cq % 4 == 0}
+    n_filter = {cq // 4: int(n) for cq, n in need.items() if cq % 4 == 3}
+    # qids that DECLARED a should clause (pre-drop): ES applies
     # minimum_should_match only to those — a must-only query is untouched
-    has_should = {
-        int(cq) // 4 for cq in qt.loc[qt["qid"] % 4 == 1, "qid"].unique()
-    }
-    n_filter = {
-        int(cq) // 4: int(n)
-        for cq, n in qt[qt["qid"] % 4 == 3].groupby("qid").size().items()
-    }
-    qt = qt.dropna(subset=["df"])
+    has_should = {cq // 4 for cq in need if cq % 4 == 1}
     if qt.empty:
         return None
-    n_docs = float(store.meta["n_docs"])
-    qt["w"] = bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
 
     joined = _matched_blocks(spark, store, qt)
     cand = _score_exhaustive(joined, avgdl)
@@ -1028,21 +1078,14 @@ def search_more_like_this(
     sized, like all query preprocessing) — never over the dictionary.
     """
     prefix, mlt_avgdl = _field_of(store, field)
-    rows = []
-    for qid, text in zip(likes["qid"], likes["like"]):
-        toks = analysis.tokenize_series(pd.Series([str(text)]))[0]
-        for t, c in sorted(Counter(toks).items()):
-            rows.append((int(qid), prefix + t, int(c)))
-    qt = pd.DataFrame(rows, columns=["qid", "term", "qtf"])
-    if qt.empty:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    qt = _join_term_stats(spark, store, qt, sorted(qt["term"].unique()))
-    qt = qt.dropna(subset=["df"])
+    likes = pd.DataFrame(
+        {"qid": likes["qid"], "query": [str(t) for t in likes["like"]]}
+    )
+    qt, _ = _weighted_terms(spark, store, _query_terms(likes, prefix))
     qt = qt[qt["df"] >= min_doc_freq]
     if qt.empty:
         return spark.createDataFrame([], RESULT_SCHEMA)
-    n_docs = float(store.meta["n_docs"])
-    idf = bm25.idf(n_docs, qt["df"].to_numpy())
+    idf = bm25.idf(float(store.meta["n_docs"]), qt["df"].to_numpy())
     qt = qt.assign(_sel=np.round(qt["qtf"].to_numpy() * idf, 9))
     qt = (
         qt.sort_values(["qid", "_sel", "term"],
@@ -1050,40 +1093,8 @@ def search_more_like_this(
         .groupby("qid", sort=False)
         .head(max_query_terms)
     )
-    qt = qt.copy()
-    qt["w"] = bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
-    joined = _matched_blocks(spark, store, qt)
-    cand = _score_exhaustive(joined, mlt_avgdl)
-    agg = cand.groupBy("qid", "doc_int").agg(F.sum("score").alias("score"))
-    agg = _drop_dead(spark, store, agg)
+    agg = _bm25_hits(spark, store, qt, mlt_avgdl)
     return _present(spark, store, _cut_topk(agg, k), k)
-
-
-def _join_term_stats(
-    spark: SparkSession,
-    store: IndexStore,
-    qt: pd.DataFrame,
-    terms: list[str],
-) -> pd.DataFrame:
-    """Attach df(t) and the storage bucket to the query-term table via one
-    targeted term_stats read (metadata-sized). Terms absent from the index
-    get df = NaN. Tolerates legacy stores without the term_bucket column.
-    The read is driver-side (:func:`store_io.sorted_read` over the
-    term-sorted files, plans/build._finalize_store); stores pyarrow cannot
-    read take one Spark filter job instead."""
-    ts = store_io.sorted_read(
-        os.path.join(store.path, "term_stats"), "term",
-        ("term", "df", "term_bucket"), keys=terms,
-    )
-    if ts is None:
-        ts = store.term_stats(spark).filter(F.col("term").isin(terms))
-        ts = ts.toPandas()
-    ts = ts.set_index("term")
-    qt = qt.copy()
-    qt["df"] = qt["term"].map(ts["df"]) if len(ts) else float("nan")
-    if "term_bucket" in ts.columns and len(ts):
-        qt["bucket"] = qt["term"].map(ts["term_bucket"])
-    return qt
 
 
 def _matched_blocks(
@@ -1160,15 +1171,12 @@ def _score_expansion(
     qt = qt.drop_duplicates(subset=["qid", "term"])
     if qt.empty:
         return spark.createDataFrame([], RESULT_SCHEMA)
-    n_docs = float(store.meta["n_docs"])
     if avgdl is None:
         avgdl = float(store.meta["avgdl"])
-    qt = qt.copy()
-    qt["w"] = bm25.query_weight(n_docs, qt["df"])
-    joined = _matched_blocks(spark, store, qt)
-    cand = _score_exhaustive(joined, avgdl)
-    agg = cand.groupBy("qid", "doc_int").agg(F.sum("score").alias("score"))
-    agg = _drop_dead(spark, store, agg)
+    qt = qt.assign(
+        w=bm25.query_weight(float(store.meta["n_docs"]), qt["df"])
+    )
+    agg = _bm25_hits(spark, store, qt, avgdl)
     return _present(spark, store, _cut_topk(agg, k), k)
 
 
@@ -1293,47 +1301,38 @@ def search_match_bool_prefix(
     term-ascending — ES's ``max_expansions``); fixed terms and
     expansions then ride ONE pruned posting read and one aggregation."""
     prefix, avgdl = _field_of(store, field)
-    n_docs = float(store.meta["n_docs"])
-    fixed_rows, last_rows = [], []
-    for qid, q in zip(queries["qid"], queries["query"]):
-        toks = analysis.tokenize_series(pd.Series([str(q)]))[0]
-        if not toks:
-            continue
-        for t, c in sorted(Counter(toks[:-1]).items()):
-            fixed_rows.append((int(qid), prefix + t, int(c)))
-        last_rows.append((int(qid), prefix + toks[-1]))
-    if not last_rows:
+    toks = analysis.tokenize_series(
+        pd.Series([str(q) for q in queries["query"]])
+    )
+    # every term but the last is a fixed should clause; the last expands
+    last = [(int(q), prefix + t[-1]) for q, t in zip(queries["qid"], toks)
+            if t]
+    if not last:
         return spark.createDataFrame([], RESULT_SCHEMA)
-    pats = pd.DataFrame(last_rows, columns=["qid", "prefix"]).drop_duplicates()
+    # analyzed tokens re-analyze to themselves, so the joined prefix of
+    # each query tokenizes back to its fixed terms
+    fixed, _ = _term_table(spark, store, _query_terms(
+        pd.DataFrame({"qid": queries["qid"],
+                      "query": [" ".join(t[:-1]) for t in toks]}),
+        prefix,
+    ))
+    pats = pd.DataFrame(last, columns=["qid", "prefix"]).drop_duplicates()
     exp = _expand_startswith(spark, store, pats, max_expansions)
-    exp = exp.drop_duplicates(subset=["qid", "term"])
-    qt_parts = []
-    if fixed_rows:
-        qtf = pd.DataFrame(fixed_rows, columns=["qid", "term", "qtf"])
-        qtf = _join_term_stats(
-            spark, store, qtf, sorted(qtf["term"].unique().tolist())
-        ).dropna(subset=["df"])
-        qt_parts.append(qtf)
-    if not exp.empty:
-        exp = exp.copy()
-        exp["qtf"] = 1
-        qt_parts.append(exp)
-    if not qt_parts:
+    exp = exp.drop_duplicates(subset=["qid", "term"]).assign(qtf=1)
+    parts = [p for p in (fixed, exp) if not p.empty]
+    if not parts:
         return spark.createDataFrame([], RESULT_SCHEMA)
-    qt = pd.concat(qt_parts, ignore_index=True)
+    qt = pd.concat(parts, ignore_index=True)
     # a term both fixed and expanded folds: qtf adds like duplicate query
     # terms in ES (the bool has two clauses matching it)
     agg_cols = {"qtf": "sum", "df": "first"}
     if "bucket" in qt.columns:
         agg_cols["bucket"] = "first"
-    qt = (
-        qt.groupby(["qid", "term"], as_index=False).agg(agg_cols)
+    qt = qt.groupby(["qid", "term"], as_index=False).agg(agg_cols)
+    qt["w"] = bm25.query_weight(
+        float(store.meta["n_docs"]), qt["df"], qt["qtf"].to_numpy()
     )
-    qt["w"] = bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
-    joined = _matched_blocks(spark, store, qt)
-    cand = _score_exhaustive(joined, avgdl)
-    agg = cand.groupBy("qid", "doc_int").agg(F.sum("score").alias("score"))
-    agg = _drop_dead(spark, store, agg)
+    agg = _bm25_hits(spark, store, qt, avgdl)
     return _present(spark, store, _cut_topk(agg, k), k)
 
 
@@ -1374,11 +1373,11 @@ def search_as_you_type(
     root = flds[0]
     pfx_field = f"{root}._index_prefix"
     avgdls = store.meta["avgdl_fields"]
-    n_docs = float(store.meta["n_docs"])
     rows: list[tuple] = []
     long_last: list[tuple[int, str]] = []
-    for qid, q in zip(queries["qid"], queries["query"]):
-        toks = list(analysis.tokenize_series(pd.Series([str(q)]))[0])
+    for qid, toks in zip(queries["qid"], analysis.tokenize_series(
+        pd.Series([str(q) for q in queries["query"]])
+    )):
         if not toks:
             continue
         qid = int(qid)
@@ -1421,18 +1420,12 @@ def search_as_you_type(
             parts.append(exp[["qid", "term", "qtf", "avgdl"]])
     if not parts:
         return spark.createDataFrame([], RESULT_SCHEMA)
-    qt = pd.concat(parts, ignore_index=True)
-    qt = _join_term_stats(
-        spark, store, qt, sorted(qt["term"].unique().tolist())
-    ).dropna(subset=["df"])
+    qt, _ = _weighted_terms(
+        spark, store, pd.concat(parts, ignore_index=True)
+    )
     if qt.empty:
         return spark.createDataFrame([], RESULT_SCHEMA)
-    qt = qt.copy()
-    qt["w"] = bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
-    joined = _matched_blocks(spark, store, qt)
-    cand = _score_exhaustive(joined, 0.0)  # per-term avgdl column
-    agg = cand.groupBy("qid", "doc_int").agg(F.sum("score").alias("score"))
-    agg = _drop_dead(spark, store, agg)
+    agg = _bm25_hits(spark, store, qt, 0.0)  # per-term avgdl column
     return _present(spark, store, _cut_topk(agg, k), k)
 
 
@@ -1516,36 +1509,14 @@ def search_facets(
     """ES ``aggs: {terms: {field: ...}}`` over the query's matching docs:
     per (qid, facet value) distinct-document counts.
 
-    Matching docs come from the same pruned posting read as scoring (no
-    score math needed); the facet column is joined from doc_stats. Returns
-    (qid, facet, n_docs). ``field`` targets one field of a multi-field
-    store.
+    Matching docs are the OR/AND match set (:func:`_match_set`, the same
+    pruned posting read as scoring); the facet column is joined from
+    doc_stats. Returns (qid, facet, n_docs). ``field`` targets one field
+    of a multi-field store.
     """
-    prefix, _ = _field_of(store, field)
-    qt = _query_terms(queries)
-    if qt.empty:
+    hits = _match_set(spark, store, queries, mode, field)
+    if hits is None:
         return spark.createDataFrame([], "qid long, facet string, n_docs long")
-    if prefix:
-        qt["term"] = prefix + qt["term"]
-    qt = _join_term_stats(spark, store, qt, sorted(qt["term"].unique()))
-    n_terms_by_qid = qt.groupby("qid").size().to_dict()
-    qt = qt.dropna(subset=["df"])
-    if qt.empty:
-        return spark.createDataFrame([], "qid long, facet string, n_docs long")
-    qt["w"] = 1.0  # unused by counting; _matched_blocks expects the column
-
-    joined = _matched_blocks(spark, store, qt)
-    cand = _score_exhaustive(joined, float(store.meta["avgdl"]) or 1.0)
-    hits = cand.groupBy("qid", "doc_int").agg(F.count("*").alias("nt"))
-    hits = _drop_dead(spark, store, hits)
-    if mode == "and":
-        need = spark.createDataFrame(
-            pd.DataFrame({"qid": list(n_terms_by_qid),
-                          "need": list(n_terms_by_qid.values())})
-        )
-        hits = hits.join(F.broadcast(need), "qid").filter(
-            F.col("nt") == F.col("need")
-        )
     stats = store.doc_stats(spark).select(
         "doc_int", F.col(facet_col).alias("facet")
     )
@@ -2144,7 +2115,6 @@ def search_span_field_masking(
         raise EngineError(
             "span_field_masking needs a store built with positions=True"
         )
-    n_docs = float(store.meta["n_docs"])
     rows, terms_by_qid = [], {}
     for r in queries.itertuples(index=False):
         pa, avg_a = _field_of(store, str(r.field_a))
@@ -2163,19 +2133,11 @@ def search_span_field_masking(
         terms_by_qid[int(r.qid)] = [qa, qb]
         rows.append((int(r.qid), qa, avg_a))
         rows.append((int(r.qid), qb, avg_b))
-    qt = pd.DataFrame(rows, columns=["qid", "term", "avgdl"])
-    if qt.empty:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    qt = _join_term_stats(
-        spark, store, qt, sorted(qt["term"].unique().tolist())
-    )
+    qt = pd.DataFrame(rows, columns=["qid", "term", "avgdl"]).assign(qtf=1)
     # AND semantics: a qid with an unindexed clause can never match
-    dead_qids = set(qt.loc[qt["df"].isna(), "qid"])
-    qt = qt[~qt["qid"].isin(dead_qids)]
+    qt = _all_terms_live(*_weighted_terms(spark, store, qt))
     if qt.empty:
         return spark.createDataFrame([], RESULT_SCHEMA)
-    qt = qt.copy()
-    qt["w"] = bm25.query_weight(n_docs, qt["df"])
 
     joined = _matched_blocks(spark, store, qt)
 
@@ -2272,7 +2234,6 @@ def search_span_not(
         )
     if pre < 0 or post < 0:
         raise EngineError("span_not pre/post must be >= 0")
-    n_docs = float(store.meta["n_docs"])
     prefix, avgdl = _field_of(store, field)
 
     inc_by_qid: dict[int, list[str]] = {}
@@ -2297,24 +2258,19 @@ def search_span_not(
         inc_by_qid[qid] = inc_t
         exc_by_qid[qid] = exc_t
         for t, c in sorted(Counter(inc_t).items()):
-            rows.append((qid, t, int(c), True))
+            rows.append((qid, t, int(c)))
         for t in sorted(set(exc_t) - set(inc_t)):
-            rows.append((qid, t, 0, False))
-    qt = pd.DataFrame(rows, columns=["qid", "term", "qtf", "_inc"])
-    if qt.empty:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    qt = _join_term_stats(
-        spark, store, qt, sorted(qt["term"].unique().tolist())
+            rows.append((qid, t, 0))
+    qt, _ = _weighted_terms(
+        spark, store, pd.DataFrame(rows, columns=["qid", "term", "qtf"])
     )
     # an unindexed INCLUDE term kills the qid (AND semantics); an
     # unindexed exclude term just means nothing to exclude
-    dead_qids = set(qt.loc[qt["df"].isna() & qt["_inc"], "qid"])
-    qt = qt[~qt["qid"].isin(dead_qids)].dropna(subset=["df"])
+    live = set(zip(qt["qid"], qt["term"]))
+    qt = qt[[all((q, t) in live for t in inc_by_qid[q]) for q in qt["qid"]]]
     if qt.empty:
         return spark.createDataFrame([], RESULT_SCHEMA)
-    qt = qt.copy()
-    qt["w"] = bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
-    joined = _matched_blocks(spark, store, qt.drop(columns=["_inc"]))
+    joined = _matched_blocks(spark, store, qt)
 
     def verify(qid, by_term, sub, stride):
         inc, exc = inc_by_qid[qid], exc_by_qid[qid]
@@ -2407,7 +2363,6 @@ def search_span_containing(
             "span_containing mode must be 'containing' or 'within'"
         )
     keep_is_big = mode == "containing"
-    n_docs = float(store.meta["n_docs"])
     prefix, avgdl = _field_of(store, field)
 
     keep_by_qid: dict[int, list[str]] = {}
@@ -2438,19 +2393,12 @@ def search_span_containing(
             rows.append((qid, t, int(c)))
         for t in sorted(set(other_t) - set(keep_t)):
             rows.append((qid, t, 0))
-    qt = pd.DataFrame(rows, columns=["qid", "term", "qtf"])
-    if qt.empty:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    qt = _join_term_stats(
-        spark, store, qt, sorted(qt["term"].unique().tolist())
-    )
     # BOTH spans must exist somewhere — any unindexed term kills the qid
-    dead_qids = set(qt.loc[qt["df"].isna(), "qid"])
-    qt = qt[~qt["qid"].isin(dead_qids)]
+    qt = _all_terms_live(*_weighted_terms(
+        spark, store, pd.DataFrame(rows, columns=["qid", "term", "qtf"])
+    ))
     if qt.empty:
         return spark.createDataFrame([], RESULT_SCHEMA)
-    qt = qt.copy()
-    qt["w"] = bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
     joined = _matched_blocks(spark, store, qt)
 
     def verify(qid, by_term, sub, stride):
@@ -2537,7 +2485,6 @@ def _phrase_scores(
         raise EngineError(
             "phrase search needs a store built with positions=True"
         )
-    n_docs = float(store.meta["n_docs"])
     prefix, avgdl = _field_of(store, field)
 
     # per qid: ordered token list; per distinct term: qtf + BM25 weight
@@ -2550,19 +2497,12 @@ def _phrase_scores(
         phrase_by_qid[int(qid)] = list(toks)
         for t, c in sorted(Counter(toks).items()):
             rows.append((int(qid), t, int(c)))
-    qt = pd.DataFrame(rows, columns=["qid", "term", "qtf"])
-    if qt.empty:
-        return None
-
-    qt = _join_term_stats(
-        spark, store, qt, sorted(qt["term"].unique().tolist())
-    )
     # a phrase containing an unindexed term can never match (AND semantics)
-    dead_qids = set(qt.loc[qt["df"].isna(), "qid"])
-    qt = qt[~qt["qid"].isin(dead_qids)]
+    qt = _all_terms_live(*_weighted_terms(
+        spark, store, pd.DataFrame(rows, columns=["qid", "term", "qtf"])
+    ))
     if qt.empty:
         return None
-    qt["w"] = bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
     joined = _matched_blocks(spark, store, qt)
 
     def verify(qid, by_term, sub, stride):
@@ -2600,27 +2540,14 @@ def _scored_or_match(
     field: str | None,
 ) -> DataFrame | None:
     """(qid, doc_int, score) OR-BM25 aggregate for an analyzed query —
-    shared by the parent-child joins. None when nothing can match. Dead
-    docs are dropped (join semantics need live docs only)."""
+    shared by the parent-child joins, function_score and the rescoring
+    paths. None when nothing can match. Dead docs are dropped (join
+    semantics need live docs only)."""
     prefix, avgdl = _field_of(store, field)
-    n_docs = float(store.meta["n_docs"])
-    qt = _query_terms(queries)
+    qt, _ = _weighted_terms(spark, store, _query_terms(queries, prefix))
     if qt.empty:
         return None
-    if prefix:
-        qt["term"] = prefix + qt["term"]
-    qt = _join_term_stats(
-        spark, store, qt, sorted(qt["term"].unique().tolist())
-    )
-    qt = qt.dropna(subset=["df"])
-    if qt.empty:
-        return None
-    qt = qt.copy()
-    qt["w"] = bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
-    joined = _matched_blocks(spark, store, qt)
-    cand = _score_exhaustive(joined, avgdl)
-    agg = cand.groupBy("qid", "doc_int").agg(F.sum("score").alias("score"))
-    return _drop_dead(spark, store, agg)
+    return _bm25_hits(spark, store, qt, avgdl).drop("nt")
 
 
 def search_has_parent(
@@ -6459,37 +6386,15 @@ def _match_set(
 ) -> DataFrame | None:
     """(qid, doc_int) match membership for an analyzed OR/AND query —
     shared by the unscored aggregation paths. None when nothing can
-    match."""
-    prefix, _ = _field_of(store, field)
-    qt = _query_terms(queries)
+    match; an unknown ``mode`` raises ``ValueError`` like search()."""
+    _check_mode(mode)
+    prefix, avgdl = _field_of(store, field)
+    qt, need = _weighted_terms(spark, store, _query_terms(queries, prefix))
     if qt.empty:
         return None
-    if prefix:
-        qt["term"] = prefix + qt["term"]
-    qt = _join_term_stats(
-        spark, store, qt, sorted(qt["term"].unique().tolist())
+    return _bm25_hits(spark, store, qt, avgdl, mode, need).select(
+        "qid", "doc_int"
     )
-    n_terms_by_qid = qt.groupby("qid").size().to_dict()
-    qt = qt.dropna(subset=["df"])
-    if qt.empty:
-        return None
-    qt = qt.copy()
-    qt["w"] = 1.0
-    joined = _matched_blocks(spark, store, qt)
-    cand = _score_exhaustive(joined, 1.0)
-    hits = cand.groupBy("qid", "doc_int").agg(F.count("*").alias("nt"))
-    hits = _drop_dead(spark, store, hits)
-    if mode == "and":
-        need = spark.createDataFrame(
-            pd.DataFrame(
-                {"qid": list(n_terms_by_qid),
-                 "need": list(n_terms_by_qid.values())}
-            )
-        )
-        hits = hits.join(F.broadcast(need), "qid").filter(
-            F.col("nt") == F.col("need")
-        )
-    return hits.select("qid", "doc_int")
 
 
 def search_boosting(
@@ -6510,26 +6415,17 @@ def search_boosting(
     read, one pruned posting read, one scoring pass; the demotion is a
     conditional multiply in the final per-(qid, doc) aggregation."""
     prefix, avgdl = _field_of(store, field)
-    n_docs = float(store.meta["n_docs"])
-    rows = []
-    for qid, pos, neg in zip(
-        queries["qid"], queries["positive"], queries["negative"]
-    ):
-        for idx, q in ((0, pos), (1, neg)):
-            toks = analysis.tokenize_series(pd.Series([str(q or "")]))[0]
-            for t, c in sorted(Counter(toks).items()):
-                rows.append((int(qid) * 2 + idx, prefix + t, int(c)))
-    qt = pd.DataFrame(rows, columns=["qid", "term", "qtf"])
-    if qt.empty:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    qt = _join_term_stats(
-        spark, store, qt, sorted(qt["term"].unique().tolist())
+    halves = pd.DataFrame(
+        [(int(qid) * 2 + idx, str(q or ""))
+         for qid, pos, neg in zip(
+             queries["qid"], queries["positive"], queries["negative"]
+         )
+         for idx, q in ((0, pos), (1, neg))],
+        columns=["qid", "query"],
     )
-    qt = qt.dropna(subset=["df"])
+    qt, _ = _weighted_terms(spark, store, _query_terms(halves, prefix))
     if qt.empty:
         return spark.createDataFrame([], RESULT_SCHEMA)
-    qt = qt.copy()
-    qt["w"] = bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
     joined = _matched_blocks(spark, store, qt)
     cand = _score_exhaustive(joined, avgdl)
     half = F.col("qid").bitwiseAND(F.lit(1))
@@ -6622,7 +6518,6 @@ def search_query_string(
     if _QS_PHRASE_STRIDE < 2:  # pragma: no cover - constant sanity
         raise EngineError("bad phrase stride")
     prefix, avgdl = _field_of(store, field)
-    n_docs = float(store.meta["n_docs"])
 
     parsed: dict[int, dict] = {}
     for qid, q in zip(queries["qid"], queries["query"]):
@@ -6652,36 +6547,30 @@ def search_query_string(
     }
 
     bool_agg = None
+    tq, _ = _weighted_terms(spark, store, tq)
     if not tq.empty:
-        tq = _join_term_stats(
-            spark, store, tq, sorted(tq["term"].unique().tolist())
-        )
-        tq = tq.dropna(subset=["df"])
-        if not tq.empty:
-            tq = tq.copy()
-            tq["w"] = bm25.query_weight(n_docs, tq["df"], tq["qtf"].to_numpy())
-            joined = _matched_blocks(spark, store, tq)
-            cand = _score_exhaustive(joined, avgdl)
-            clause = F.col("qid").bitwiseAND(F.lit(3))
-            bool_agg = (
-                cand.select(
-                    F.shiftright("qid", 2).alias("qid"),
-                    clause.alias("clause"),
-                    "doc_int",
-                    "score",
-                )
-                .groupBy("qid", "doc_int")
-                .agg(
-                    F.sum(
-                        F.when(F.col("clause") <= 1, F.col("score"))
-                    ).alias("b_score"),
-                    F.count(F.when(F.col("clause") == 0, 1)).alias("nt_must"),
-                    F.count(F.when(F.col("clause") == 1, 1)).alias(
-                        "nt_should"
-                    ),
-                    F.max(F.when(F.col("clause") == 2, 1)).alias("mnot"),
-                )
+        joined = _matched_blocks(spark, store, tq)
+        cand = _score_exhaustive(joined, avgdl)
+        clause = F.col("qid").bitwiseAND(F.lit(3))
+        bool_agg = (
+            cand.select(
+                F.shiftright("qid", 2).alias("qid"),
+                clause.alias("clause"),
+                "doc_int",
+                "score",
             )
+            .groupBy("qid", "doc_int")
+            .agg(
+                F.sum(
+                    F.when(F.col("clause") <= 1, F.col("score"))
+                ).alias("b_score"),
+                F.count(F.when(F.col("clause") == 0, 1)).alias("nt_must"),
+                F.count(F.when(F.col("clause") == 1, 1)).alias(
+                    "nt_should"
+                ),
+                F.max(F.when(F.col("clause") == 2, 1)).alias("mnot"),
+            )
+        )
 
     # --- phrase side: every (qid, phrase) packs into a composite qid ---
     ph_rows = [
@@ -6792,21 +6681,9 @@ def search_span_first(
     if end <= 0:
         raise EngineError("span_first end must be positive")
     prefix, avgdl = _field_of(store, field)
-    n_docs = float(store.meta["n_docs"])
-    qt = queries[["qid", "term"]].copy()
-    qt["term"] = prefix + qt["term"].astype(str).str.lower()
-    qt = qt.drop_duplicates()
+    qt, _ = _weighted_terms(spark, store, _exact_terms(queries, prefix))
     if qt.empty:
         return spark.createDataFrame([], RESULT_SCHEMA)
-    qt["qtf"] = 1
-    qt = _join_term_stats(
-        spark, store, qt, sorted(qt["term"].unique().tolist())
-    )
-    qt = qt.dropna(subset=["df"])
-    if qt.empty:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    qt = qt.copy()
-    qt["w"] = bm25.query_weight(n_docs, qt["df"])
     w_by = {
         (int(q), t): float(v)
         for q, t, v in zip(qt["qid"], qt["term"], qt["w"])
@@ -7002,25 +6879,10 @@ def search_terms(
     break on doc_id, as everywhere).
     """
     prefix, avgdl = _field_of(store, field)
-    qt = queries[["qid", "term"]].copy()
-    qt["term"] = prefix + qt["term"].astype(str).str.lower()
-    qt = qt.drop_duplicates()
+    qt, _ = _weighted_terms(spark, store, _exact_terms(queries, prefix))
     if qt.empty:
         return spark.createDataFrame([], RESULT_SCHEMA)
-    qt["qtf"] = 1
-    qt = _join_term_stats(
-        spark, store, qt, sorted(qt["term"].unique().tolist())
-    )
-    qt = qt.dropna(subset=["df"])
-    if qt.empty:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    n_docs = float(store.meta["n_docs"])
-    qt = qt.copy()
-    qt["w"] = bm25.query_weight(n_docs, qt["df"])
-    joined = _matched_blocks(spark, store, qt)
-    cand = _score_exhaustive(joined, avgdl)
-    agg = cand.groupBy("qid", "doc_int").agg(F.sum("score").alias("score"))
-    agg = _drop_dead(spark, store, agg)
+    agg = _bm25_hits(spark, store, qt, avgdl)
     if constant_score is not None:
         # uniform scores → every doc ties; rank on doc_id directly instead
         # of letting _cut_topk keep the entire tied set
@@ -7208,25 +7070,9 @@ def search_function_score(
         raise EngineError(f"unknown modifier: {modifier}")
     if boost_mode not in ("multiply", "sum"):
         raise EngineError(f"unknown boost_mode: {boost_mode}")
-    prefix, avgdl = _field_of(store, field)
-    n_docs = float(store.meta["n_docs"])
-    qt = _query_terms(queries)
-    if qt.empty:
+    agg = _scored_or_match(spark, store, queries, field)
+    if agg is None:
         return spark.createDataFrame([], RESULT_SCHEMA)
-    if prefix:
-        qt["term"] = prefix + qt["term"]
-    qt = _join_term_stats(
-        spark, store, qt, sorted(qt["term"].unique().tolist())
-    )
-    qt = qt.dropna(subset=["df"])
-    if qt.empty:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    qt = qt.copy()
-    qt["w"] = bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
-    joined = _matched_blocks(spark, store, qt)
-    cand = _score_exhaustive(joined, avgdl)
-    agg = cand.groupBy("qid", "doc_int").agg(F.sum("score").alias("score"))
-    agg = _drop_dead(spark, store, agg)
     raw = F.lit(float(factor_weight)) * F.col(factor_col).cast("double")
     factor = {
         "none": raw,
@@ -7373,29 +7219,19 @@ def search_dis_max(
     a single groupBy((qid, doc)) with max/sum aggregates — no extra scan or
     shuffle per clause.
     """
-    n_docs = float(store.meta["n_docs"])
     prefix, avgdl = _field_of(store, field)
-    rows = []
-    for qid, clause, q in zip(
-        clauses["qid"], clauses["clause"], clauses["query"]
-    ):
+    for clause in clauses["clause"]:
         if not (0 <= int(clause) < _DISMAX_CLAUSE_STRIDE):
             raise EngineError(f"clause id out of range: {clause}")
-        toks = analysis.tokenize_series(pd.Series([str(q)]))[0]
-        cq = int(qid) * _DISMAX_CLAUSE_STRIDE + int(clause)
-        for t, c in sorted(Counter(toks).items()):
-            rows.append((cq, prefix + t, int(c)))
-    qt = pd.DataFrame(rows, columns=["qid", "term", "qtf"])
+    comp = pd.DataFrame({
+        "qid": [int(q) * _DISMAX_CLAUSE_STRIDE + int(c)
+                for q, c in zip(clauses["qid"], clauses["clause"])],
+        "query": [str(q) for q in clauses["query"]],
+    })
+    # OR semantics: unindexed terms drop out
+    qt, _ = _weighted_terms(spark, store, _query_terms(comp, prefix))
     if qt.empty:
         return spark.createDataFrame([], RESULT_SCHEMA)
-    qt = _join_term_stats(
-        spark, store, qt, sorted(qt["term"].unique().tolist())
-    )
-    qt = qt.dropna(subset=["df"])  # OR semantics: unindexed terms drop out
-    if qt.empty:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    qt = qt.copy()
-    qt["w"] = bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
     joined = _matched_blocks(spark, store, qt)
     cand = _score_exhaustive(joined, avgdl)
     per_clause = cand.groupBy("qid", "doc_int").agg(
@@ -7475,35 +7311,20 @@ def search_phrase_prefix(
         for qid, fixed in fixed_by_qid.items()
         for t, c in sorted(Counter(fixed).items())
     ]
-    fx = pd.DataFrame(rows, columns=["qid", "term", "qtf"])
-    if not fx.empty:
-        fx = _join_term_stats(
-            spark, store, fx, sorted(fx["term"].unique().tolist())
-        )
+    fx, need = _weighted_terms(
+        spark, store, pd.DataFrame(rows, columns=["qid", "term", "qtf"])
+    )
+    fx = _all_terms_live(fx, need)
     # a qid dies when a fixed term is unindexed (phrase AND semantics) or
     # when its prefix expands to nothing
-    dead = set(fx.loc[fx["df"].isna(), "qid"]) if not fx.empty else set()
+    dead = set(need) - set(fx["qid"])
     dead |= {q for q in fixed_by_qid if q not in exp_by_qid}
-
-    fx = (
-        fx[~fx["qid"].isin(dead)]
-        if not fx.empty
-        else pd.DataFrame(columns=["qid", "term", "qtf", "df"])
-    )
+    fx = fx[~fx["qid"].isin(dead)].rename(columns={"w": "w_f"})
     exp = exp[~exp["qid"].isin(dead)] if not exp.empty else exp
     if exp.empty:
         return spark.createDataFrame([], RESULT_SCHEMA)
 
-    fx = fx.assign(
-        w_f=bm25.query_weight(
-            n_docs,
-            fx["df"].to_numpy(dtype="float64"),
-            fx["qtf"].to_numpy(dtype="float64"),
-        )
-        if len(fx)
-        else pd.Series([], dtype="float64"),
-        w_e=0.0,
-    )
+    fx = fx.assign(w_e=0.0)
     exp = exp.assign(
         w_f=0.0,
         w_e=bm25.query_weight(n_docs, exp["df"].to_numpy(dtype="float64")),
@@ -7513,7 +7334,7 @@ def search_phrase_prefix(
     )
     cols = ["qid", "term", "w_f", "w_e"] + (["bucket"] if has_bucket else [])
     both = pd.concat(
-        [fx[cols]] * (0 if fx.empty else 1) + [exp[cols]], ignore_index=True
+        [f[cols] for f in (fx, exp) if not f.empty], ignore_index=True
     )
     agg = {"w_f": ("w_f", "sum"), "w_e": ("w_e", "sum")}
     if has_bucket:
@@ -8586,29 +8407,12 @@ def search_terms_set(
     if k < 1:
         raise EngineError("terms_set k must be >= 1")
     prefix, avgdl = _field_of(store, field)
-    n_docs = float(store.meta["n_docs"])
-    qt = _query_terms(queries)
+    qt, _ = _weighted_terms(spark, store, _query_terms(queries, prefix))
     if qt.empty:
         return spark.createDataFrame(
             [], "qid long, rank int, doc_id string, nt long, score_r double"
         )
-    if prefix:
-        qt["term"] = prefix + qt["term"]
-    qt = _join_term_stats(
-        spark, store, qt, sorted(qt["term"].unique().tolist())
-    ).dropna(subset=["df"])
-    if qt.empty:
-        return spark.createDataFrame(
-            [], "qid long, rank int, doc_id string, nt long, score_r double"
-        )
-    qt = qt.copy()
-    qt["w"] = bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
-    joined = _matched_blocks(spark, store, qt)
-    cand = _score_exhaustive(joined, avgdl)
-    agg = cand.groupBy("qid", "doc_int").agg(
-        F.sum("score").alias("score"), F.count("*").alias("nt")
-    )
-    agg = _drop_dead(spark, store, agg)
+    agg = _bm25_hits(spark, store, qt, avgdl)
     stats = store.doc_stats(spark).withColumn(
         "_required", F.greatest(F.lit(1), F.expr(msm_expr).cast("long"))
     ).select("doc_int", "doc_id", "_required")
@@ -9348,23 +9152,11 @@ def search_matched_queries(
             )
     comp = pd.DataFrame(rows, columns=["qid", "query"])
     prefix, avgdl = _field_of(store, field)
-    qt = _query_terms(comp)
+    qt, _ = _weighted_terms(spark, store, _query_terms(comp, prefix))
     if qt.empty:
         return spark.createDataFrame(
             [], RESULT_SCHEMA + ", matched string"
         )
-    if prefix:
-        qt["term"] = prefix + qt["term"]
-    qt = _join_term_stats(
-        spark, store, qt, sorted(qt["term"].unique().tolist())
-    )
-    qt = qt.dropna(subset=["df"]).copy()
-    if qt.empty:
-        return spark.createDataFrame(
-            [], RESULT_SCHEMA + ", matched string"
-        )
-    n_docs = float(store.meta["n_docs"])
-    qt["w"] = bm25.query_weight(n_docs, qt["df"], qt["qtf"].to_numpy())
     joined = _matched_blocks(spark, store, qt)
     cand = _score_exhaustive(joined, avgdl)
     name_rows = [
@@ -9989,15 +9781,12 @@ def search_sparse_vector(
     prefix, _ = _field_of(store, field)
     if prefix:
         qt["term"] = prefix + qt["term"]
-    qt = _join_term_stats(
-        spark, store, qt, sorted(qt["term"].unique().tolist())
-    )
-    qt = qt.dropna(subset=["df"])
+    qt, _ = _term_table(spark, store, qt)
     if qt.empty:
         return spark.createDataFrame(
             [], "qid long, doc_id string, score double"
         )
-    joined = _matched_blocks(spark, store, qt[["qid", "term", "w"]])
+    joined = _matched_blocks(spark, store, qt)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # batch-level decode (guide §4.2) — same shape as
@@ -10964,7 +10753,6 @@ def search_lucene_query_string(
     )
     if atoms.empty:
         return spark.createDataFrame([], RESULT_SCHEMA)
-    n_docs = float(store.meta["n_docs"])
 
     cands: list[DataFrame] = []
 
@@ -10981,14 +10769,10 @@ def search_lucene_query_string(
         qt["term"] = [p + t for p, t in zip(prefixes, qt["text"])]
         qt["avgdl"] = avgdls
         qt["qid"] = qt["qid"] * _LQS_STRIDE + qt["bit"]
-        qt = qt[["qid", "term", "avgdl"]]
-        qt = _join_term_stats(
-            spark, store, qt, sorted(qt["term"].unique().tolist())
+        qt, _ = _weighted_terms(
+            spark, store, qt[["qid", "term", "avgdl"]].assign(qtf=1)
         )
-        qt = qt.dropna(subset=["df"])
         if not qt.empty:
-            qt = qt.copy()
-            qt["w"] = bm25.query_weight(n_docs, qt["df"])
             joined = _matched_blocks(spark, store, qt)
             # per-atom avgdl column rules the length norm
             cands.append(_score_exhaustive(joined, 0.0))

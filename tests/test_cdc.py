@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dynamo2es_lambda_spark import IndexerConfig
+from dynamo2es_lambda_spark.errors import EngineError
 from dynamo2es_lambda_spark.operators import actions
 from dynamo2es_lambda_spark.plans import build, cdc, search
 from dynamo2es_lambda_spark.sources import synthetic
@@ -249,6 +250,26 @@ def test_cdc_inherits_store_bucket_layout(spark, tmp_path_factory):
     q = pd.DataFrame({"qid": [0], "query": ["winner"]})
     got = search.search(spark, store, q, k=5).toPandas()
     assert len(got) == 1
+
+
+def test_compaction_rejects_a_different_bucket_count(spark, tmp_path_factory):
+    """compact_store never re-buckets: an explicit num_buckets other than
+    the store's raises and leaves meta.json byte-for-byte unchanged (the
+    blocks stay under the store's own term_bucket= directories); None or
+    the store's own value compacts."""
+    path = str(tmp_path_factory.mktemp("cdc_compact_buckets"))
+    corpus = spark.createDataFrame(_corpus0().iloc[:50])
+    build.build_index(corpus, CFG, path, segment_docs=64, num_buckets=4)
+    meta_path = os.path.join(path, "meta.json")
+    before = open(meta_path, "rb").read()
+    with pytest.raises(EngineError, match="num_buckets=4"):
+        cdc.compact_store(spark, path, num_buckets=16)
+    with pytest.raises(EngineError, match="num_buckets=4"):
+        cdc.maybe_compact(spark, path, max_batches=0, num_buckets=16)
+    assert open(meta_path, "rb").read() == before
+    cdc.compact_store(spark, path, num_buckets=4)
+    cdc.compact_store(spark, path)
+    assert search.load_store(path).meta["num_buckets"] == 4
 
 
 def test_delete_only_batches_do_not_clobber_tombstones(spark, tmp_path_factory):

@@ -122,6 +122,23 @@ def test_phrase_prefix_rank_identity(spark, pos_store, oracle):
     assert n_nonempty >= 3, "fixture phrase-prefixes must actually match"
 
 
+def test_phrase_prefix_bare_prefix_batch(spark, pos_store, oracle):
+    """A batch whose every query is a bare prefix (no fixed tokens, so no
+    fixed-term table and no bucket column on it) ranks like the oracle —
+    it raised ``KeyError: ['bucket']`` before."""
+    qs = _pp_queries(oracle)[4:]  # the bare-prefix entry only
+    res = search.search_phrase_prefix(
+        spark, pos_store, pd.DataFrame(qs, columns=["qid", "query"]), k=10
+    ).toPandas()
+    assert len(res)
+    for qid, q in qs:
+        got = res[res.qid == qid].sort_values("rank")
+        _assert_rank_identical(
+            list(zip(got["doc_id"], got["score"])),
+            oracle.phrase_prefix_topk(q, k=10), qid,
+        )
+
+
 def test_phrase_prefix_subsumes_phrase_hits(spark, pos_store, oracle):
     """Every exact-phrase hit must also be a phrase-prefix hit when the
     last token is left whole (the term itself completes its own prefix)."""

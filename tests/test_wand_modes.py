@@ -80,6 +80,25 @@ def test_unknown_mode_raises_on_every_algo(spark, store, qsets, algo, mode):
         search.search(spark, store, full, k=5, mode=mode, algo=algo)
 
 
+@pytest.mark.parametrize(
+    "entry",
+    [
+        lambda sp, st, q, m: search.search_facets(sp, st, q, mode=m),
+        lambda sp, st, q, m: search.search_stats_agg(sp, st, q, mode=m),
+        lambda sp, st, q, m: search.search_terms_agg(
+            sp, st, q, group_col="lang", mode=m
+        ),
+    ],
+    ids=["facets", "stats_agg", "terms_agg"],
+)
+@pytest.mark.parametrize("mode", ["AND", "xor", ""])
+def test_unknown_mode_raises_on_match_set(spark, store, qsets, entry, mode):
+    # the unscored aggregation family shares search()'s mode rule
+    full, _ = qsets
+    with pytest.raises(ValueError, match="unknown mode"):
+        entry(spark, store, full, mode)
+
+
 def test_wand_search_after_pages_tile(spark, store, qsets):
     """Paginate the whole ranking with the WAND cursor: the concatenation
     of pages must equal the one-shot deep ranking, per qid."""
@@ -217,11 +236,9 @@ def test_literal_term_map_escapes_round_trip(spark, mf_store, monkeypatch):
     suffix = ' "q\\ué中\U0001F600'
     n_docs = float(mf_store.meta["n_docs"])
     prefix, avgdl = search._field_of(mf_store, None)
-    qt = search._query_terms(_batch40())
-    qt["term"] = prefix + qt["term"]
-    qt = search._join_term_stats(
-        spark, mf_store, qt, sorted(qt["term"].unique().tolist())
-    ).dropna(subset=["df"])
+    qt, _ = search._term_table(
+        spark, mf_store, search._query_terms(_batch40(), prefix)
+    )
     qt["w"] = (
         search.bm25.idf(n_docs, qt["df"].to_numpy())
         * (search.bm25.K1 + 1.0) * qt["qtf"].to_numpy()
